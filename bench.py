@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints TWO JSON lines: first the
-full record (headline + auxiliary pipeline_r*/skew/ann_scale
-sections), then a COMPACT final line with just
+full record (headline + the auxiliary sections of ``SECTIONS``), then
+a COMPACT final line with just
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
  "sf": ..., "calibration_sec": ...}
 so a consumer that keeps only the tail of stdout (or parses the last
@@ -10,7 +10,11 @@ line) always sees an intact headline record. ``calibration_sec``
 times a fixed pure-python busy loop on this host right before the
 suite — cross-round headline deltas should be read against it (the
 benchmark host shows 1.2-1.5x tenancy swings on identical code;
-see SURVEY §7)."""
+see SURVEY §7).
+
+Options (environment): SPARK_GRAFT_BENCH_REPS (samples per query,
+default 3) and SPARK_GRAFT_SKEW / SPARK_GRAFT_ANN_SCALE /
+SPARK_GRAFT_SCALING (=0 skips that heavy section)."""
 
 from __future__ import annotations
 
@@ -22,164 +26,456 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import __spark_entry__ as entry_mod
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+import __spark_entry__ as E  # registry builders: E.q_<key>
 from openset_spark import get_spark
+from openset_spark.pipeline.dedup import dup_clusters, minhash_candidates
+from openset_spark.pipeline.sampling import leakage_safe_split
+from openset_spark.pipeline.similarity import ivf_topk, lsh_topk
+from openset_spark.sources.tables import load_table
 
-# Headline set: one per operator family — event agg, sessionize,
-# funnel, paths, retention, segments, property/histogram, relational
-# joins/agg, dedup, ANN, text.
-HEADLINE = [
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "event_agg_by_type",
-    "session_counts",
-    "session_stats",
-    "funnel_signup_purchase",
-    "next_event_transitions",
-    "weekly_retention",
-    "segment_counts",
-    "property_counts_by_segment",
-    "histogram_weeks_since",
-    "dedup_exact",
-    "dedup_minhash",
-    "ann_topk",  # brute-force recall oracle; LSH/IVF below are the scale paths
-    "ann_lsh",
-    "ann_ivf",
-    "quality_score",
-]
+# --------------------------------------------------------------------
+# bench-only builders: the PRODUCTION operator paths. Several registry
+# keys are oracle-verification frames (they also run the exact ground
+# truth in-plan so the driver can hash them); the bench times the
+# production operator with the r1-r4 parameters under the same output
+# name so the cross-round per-query series stays comparable.
+# --------------------------------------------------------------------
+_COMPS_CACHE: dict[object, object] = {}
 
-
-def _bench_impls():
-    """Round 5 turned the registry's dedup_minhash / ann_lsh / ann_ivf
-    into oracle-verification frames (they now ALSO run the exact
-    ground truth in-plan so the driver can hash them). The bench keeps
-    timing the PRODUCTION operator with the exact r1-r4 parameters so
-    the cross-round per-query series stays comparable."""
-    from pyspark.sql import functions as F
-
-    from openset_spark.pipeline.dedup import minhash_candidates
-    from openset_spark.pipeline.similarity import ivf_topk, lsh_topk
-    from openset_spark.sources.tables import load_table
-
-    def docs(spark, sf_dir):
-        return load_table(spark, sf_dir, "documents")
-
-    def ann_inputs(spark, sf_dir):
-        embs = load_table(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        qs = embs.filter(F.col("vec_id") < 50).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        return embs, qs
-
-    from openset_spark.pipeline.dedup import dup_clusters
-    from openset_spark.pipeline.sampling import leakage_safe_split
-
-    def _leakage_split_prod(s, d):
-        # production shape (VERDICT r8 ask #7): the corpus-prep chain
-        # materializes the component frame ONCE (its build cost is the
-        # dedup_clusters bench entry above) and the split reuses it
-        # via comps= — one left join + column expressions.
-        dd = docs(s, d)
-        if d not in _COMPS_CACHE:
-            comps = dup_clusters(minhash_candidates(dd)).localCheckpoint()
-            _COMPS_CACHE[d] = comps
-        return leakage_safe_split(dd, comps=_COMPS_CACHE[d])
-
-    def _knn_agreement_cand(s, d):
-        # candidate-driven shape (VERDICT r9 ask #3): the IVF index is
-        # an ingest-time artifact (cached once, like the split's
-        # component frame); the query pays only the probe join +
-        # candidate-bounded scoring, never the corpus x queries cross
-        # join the registry's exact/oracle path times above.
-        from openset_spark.pipeline.similarity import (
-            ivf_candidate_pairs,
-            knn_label_agreement,
-        )
-
-        embs, _ = ann_inputs(s, d)
-        embs = embs.select("vec_id", "label", "embedding")
-        key = ("ivf_idx", d)
-        if key not in _COMPS_CACHE:
-            from openset_spark.pipeline.similarity import ivf_index
-
-            assigned, cents = ivf_index(embs, n_lists=16)
-            _COMPS_CACHE[key] = (assigned.localCheckpoint(), cents)
-        queries = embs.filter(F.col("vec_id") < 200).select(
-            F.col("vec_id").alias("query_id"), "label", "embedding"
-        )
-        # payload candidates (label+vector on the pair row): the
-        # scorer skips its corpus re-join, so the query path is pure
-        # broadcast joins over the pruned index scan. IVF pairs are
-        # unique by construction (one list per vector).
-        cand = ivf_candidate_pairs(
-            embs, queries, nprobe=4, index=_COMPS_CACHE[key],
-            payload_cols=("label", "embedding"),
-        )
-        return knn_label_agreement(
-            embs, queries, k=10, candidates=cand, assume_distinct=True
-        )
-
-    return {
-        "dedup_minhash": lambda s, d: minhash_candidates(docs(s, d)),
-        "knn_agreement_cand": _knn_agreement_cand,
-        # the registry's dedup_clusters clusters the exact-Jaccard
-        # pair set (its recursive-CTE oracle needs exact pairs); at
-        # sf0.1 that graph is near-complete (7.1M of 12.5M possible
-        # pairs — the synthetic corpus is template-heavy), so the
-        # bench times the PRODUCTION composition instead: clusters
-        # over the LSH candidate pairs, the pair source prepare_corpus
-        # actually uses.
-        "dedup_clusters": lambda s, d: dup_clusters(
-            minhash_candidates(docs(s, d))
-        ),
-        # same fence for the split operator: production pairs = LSH
-        # candidates, not the near-complete exact-Jaccard graph
-        "leakage_safe_split": lambda s, d: _leakage_split_prod(s, d),
-        "ann_lsh": lambda s, d: lsh_topk(
-            *ann_inputs(s, d), dim=64, k=10, n_planes=6
-        ),
-        "ann_ivf": lambda s, d: ivf_topk(
-            *ann_inputs(s, d), k=10, n_lists=16, nprobe=4
-        ),
-        # registry ann_pq is a recall-verification frame (runs brute
-        # force in-plan); bench times the production PQ path alone
-        "ann_pq": lambda s, d: _pq_prod(s, d),
-    }
-
-
-_COMPS_CACHE: dict[str, object] = {}
-
-# Ingest-time PQ index, built once per sf_dir (VERDICT r8 ask #4):
-# at scale nobody trains codebooks or encodes the corpus inside the
-# query — books/codes are written at ingest like the LSH/IVF bucket
-# indexes. The build is timed separately as pipeline_r8.ann_pq_build.
+# Ingest-time PQ index, built once per sf_dir: at scale nobody trains
+# codebooks or encodes the corpus inside the query — books/codes are
+# written at ingest like the LSH/IVF bucket indexes. The build is
+# timed on its own as pipeline_r8.ann_pq_build.
 _PQ_INDEX: dict[str, tuple] = {}
 
 
-def _pq_build(s, d):
+def _docs(spark, sf_dir):
+    return load_table(spark, sf_dir, "documents")
+
+
+def _ann_inputs(spark, sf_dir):
+    embs = load_table(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    qs = embs.filter(F.col("vec_id") < 50).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    return embs, qs
+
+
+def _lsh_candidates(spark, sf_dir):
+    return minhash_candidates(_docs(spark, sf_dir))
+
+
+def _lsh_clusters(spark, sf_dir):
+    # the registry's dedup_clusters clusters the exact-Jaccard pair set
+    # (its recursive-CTE oracle needs exact pairs); at sf0.1 that graph
+    # is near-complete (7.1M of 12.5M possible pairs — the synthetic
+    # corpus is template-heavy), so the bench times the production
+    # composition: clusters over the LSH candidate pairs, the pair
+    # source prepare_corpus actually uses.
+    return dup_clusters(minhash_candidates(_docs(spark, sf_dir)))
+
+
+def _lsh_leakage_split(spark, sf_dir):
+    # production shape: the corpus-prep chain materializes the
+    # component frame ONCE (its build cost is the dedup_clusters entry)
+    # and the split reuses it via comps= — one left join + column
+    # expressions. Pairs are LSH candidates, not the exact graph.
+    dd = _docs(spark, sf_dir)
+    if sf_dir not in _COMPS_CACHE:
+        comps = dup_clusters(minhash_candidates(dd)).localCheckpoint()
+        _COMPS_CACHE[sf_dir] = comps
+    return leakage_safe_split(dd, comps=_COMPS_CACHE[sf_dir])
+
+
+def _lsh_topk(spark, sf_dir):
+    return lsh_topk(*_ann_inputs(spark, sf_dir), dim=64, k=10, n_planes=6)
+
+
+def _ivf_topk(spark, sf_dir):
+    return ivf_topk(*_ann_inputs(spark, sf_dir), k=10, n_lists=16, nprobe=4)
+
+
+def _knn_agreement_cand(spark, sf_dir):
+    # candidate-driven shape: the IVF index is an ingest-time artifact
+    # (cached once, like the split's component frame); the query pays
+    # only the probe join + candidate-bounded scoring, never the
+    # corpus x queries cross join the registry's exact path times.
+    from openset_spark.pipeline.similarity import (
+        ivf_candidate_pairs,
+        knn_label_agreement,
+    )
+
+    embs, _ = _ann_inputs(spark, sf_dir)
+    embs = embs.select("vec_id", "label", "embedding")
+    key = ("ivf_idx", sf_dir)
+    if key not in _COMPS_CACHE:
+        from openset_spark.pipeline.similarity import ivf_index
+
+        assigned, cents = ivf_index(embs, n_lists=16)
+        _COMPS_CACHE[key] = (assigned.localCheckpoint(), cents)
+    queries = embs.filter(F.col("vec_id") < 200).select(
+        F.col("vec_id").alias("query_id"), "label", "embedding"
+    )
+    # payload candidates (label+vector on the pair row): the scorer
+    # skips its corpus re-join, so the query path is pure broadcast
+    # joins over the pruned index scan. IVF pairs are unique by
+    # construction (one list per vector).
+    cand = ivf_candidate_pairs(
+        embs, queries, nprobe=4, index=_COMPS_CACHE[key],
+        payload_cols=("label", "embedding"),
+    )
+    return knn_label_agreement(
+        embs, queries, k=10, candidates=cand, assume_distinct=True
+    )
+
+
+def _pq_build(spark, sf_dir):
     from openset_spark.pipeline.pq import pq_codebooks, pq_encode
 
-    if d not in _PQ_INDEX:
-        embs, _ = _ann_inputs_for_pq(s, d)
+    if sf_dir not in _PQ_INDEX:
+        embs, _ = _ann_inputs(spark, sf_dir)
         books = pq_codebooks(embs, m=8, ksub=16, refine_iters=1,
                              method="numpy")
         codes = pq_encode(embs, books, method="numpy").cache()
         codes.count()
-        _PQ_INDEX[d] = (books, codes)
-    return _PQ_INDEX[d]
+        _PQ_INDEX[sf_dir] = (books, codes)
+    return _PQ_INDEX[sf_dir]
 
 
-def _pq_prod(s, d):
+def _pq_topk(spark, sf_dir):
+    # the registry's ann_pq is a recall-verification frame (runs brute
+    # force in-plan); this is the production PQ path alone
     from openset_spark.pipeline.pq import pq_topk
 
-    books, codes = _pq_build(s, d)
-    embs, qs = _ann_inputs_for_pq(s, d)
+    books, codes = _pq_build(spark, sf_dir)
+    embs, qs = _ann_inputs(spark, sf_dir)
     return pq_topk(embs, qs, k=10, m=8, ksub=16, shortlist=192,
                    refine_iters=1, books=books, codes=codes,
                    adc_method="numpy")
+
+
+# --------------------------------------------------------------------
+# scale sections: each generates its own synthetic input and returns
+# its own record (imports stay inside so one broken module costs only
+# its section)
+# --------------------------------------------------------------------
+def _hll_scale(spark):
+    # grouped approx_distinct vs exact countDistinct on a 6M-row /
+    # 500k-user corpus: speedup and worst per-group relative error
+    from openset_spark.pipeline.hll_bench import run_hll_bench
+
+    return run_hll_bench(spark)
+
+
+def _sliding_scale(spark):
+    # 72 trailing-window answers from ONE scan (stored partials) vs one
+    # re-sketch scan per slide point — identical answers by the fold
+    # law, so this measures pure scan count
+    from openset_spark.pipeline.sliding_bench import run_sliding_bench
+
+    return run_sliding_bench(spark)
+
+
+def _url_scale(spark):
+    # canonicalization throughput (steady-state median; the one-time
+    # JIT compile is parse_first_sec), URL-level dedup and the zero-join
+    # domain link graph on 2M synthetic URLs/HTML built JVM-side
+    from openset_spark.pipeline.url_bench import run_url_bench
+
+    return run_url_bench(spark)
+
+
+def _sketch_scale(spark):
+    # Bloom selective-semijoin prune power and constant-shuffle CMS
+    # frequency grids
+    from openset_spark.pipeline.sketch_bench import run_sketch_bench
+
+    return run_sketch_bench(spark)
+
+
+def _layout_scale(spark):
+    """Candidate-file counts from parquet footer stats for a ~1% range
+    predicate on BOTH indexed columns: z-ordered and Hilbert layouts vs
+    a random one."""
+    import shutil
+    import tempfile
+
+    from openset_spark.sources.layout import (
+        write_hilbert,
+        write_zordered,
+        zorder_candidate_files,
+    )
+
+    d = tempfile.mkdtemp(prefix="zorder_bench_")
+    try:
+        big = spark.range(2_000_000).selectExpr(
+            "CAST(xxhash64(id) % 1000000 AS LONG) AS x",
+            "CAST(xxhash64(id + 7) % 1000000 AS LONG) AS y",
+            "id AS payload",
+        )
+        t0 = time.time()
+        write_zordered(big, f"{d}/z", ["x", "y"], bits=10, n_files=64)
+        zsec = time.time() - t0
+        t0 = time.time()
+        write_hilbert(big, f"{d}/h", ["x", "y"], bits=10, n_files=64)
+        hsec = time.time() - t0
+        big.repartition(64).write.mode("overwrite").parquet(f"{d}/p")
+        rec = {
+            "write_zordered_sec": round(zsec, 3),
+            "write_hilbert_sec": round(hsec, 3),
+        }
+        for col in ("x", "y"):
+            hz, tz, rz, rtz = zorder_candidate_files(
+                f"{d}/z", col, 10000, 30000
+            )
+            hh, th, rh, rth = zorder_candidate_files(
+                f"{d}/h", col, 10000, 30000
+            )
+            hp, tp, rp, rtp = zorder_candidate_files(
+                f"{d}/p", col, 10000, 30000
+            )
+            rec[f"{col}_files_zordered"] = f"{hz}/{tz}"
+            rec[f"{col}_files_hilbert"] = f"{hh}/{th}"
+            rec[f"{col}_files_plain"] = f"{hp}/{tp}"
+            rec[f"{col}_rows_pct_zordered"] = round(100 * rz / rtz, 1)
+            rec[f"{col}_rows_pct_hilbert"] = round(100 * rh / rth, 1)
+            rec[f"{col}_rows_pct_plain"] = round(100 * rp / rtp, 1)
+        return rec
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _loader_scale(spark):
+    # distributed prefix-sum rank vs the naive single-task global window
+    # on a 6M-row corpus, plus an exact rank-equality spot check
+    from openset_spark.pipeline.loader_bench import run_loader_bench
+
+    return run_loader_bench(spark)
+
+
+def _skew(spark):
+    # one user owns 30% of a 6M-row corpus: the skew-bound window
+    # first-row vs the salted/algebraic rewrite (scalar aggs need no
+    # salting — partial agg absorbs them)
+    from openset_spark.operators.skew_bench import run_skew_bench
+
+    return run_skew_bench(spark)
+
+
+def _ann_scale(spark):
+    # the sf0.1 embeddings table (~2k vectors) is below the crossover
+    # where bucketed ANN beats brute force, so the separation is shown
+    # on a cached 200k synthetic corpus with ingest-time LSH/IVF
+    # indexes (query paths timed; recall vs the exact oracle). reps=2:
+    # a single rep can eat a GC pause from the preceding 50s
+    # brute-force scan (observed 1.9s -> 12.4s once)
+    from openset_spark.pipeline.ann_bench import run_scale_bench
+
+    return run_scale_bench(spark, reps=2)
+
+
+def _pipeline_media(spark):
+    # decode_images / image_hashes / audio_feature_rows over cached
+    # generated payloads at a fixed byte budget: MB/s through the Arrow
+    # mapInPandas tier
+    from openset_spark.pipeline.media_bench import run_media_bench
+
+    return run_media_bench(spark)
+
+
+def _scaling(spark):
+    # a generated multi-file input whose scan/shuffle stages fan out —
+    # the core-scaling signal the single-row-group sf0.1 headline
+    # inputs cannot give
+    from openset_spark.pipeline.scaling_bench import run_scaling_bench
+
+    return run_scaling_bench(spark)
+
+
+# --------------------------------------------------------------------
+# The record, in order: section name -> either a list of timed entries
+# (output name, builder[, samples]) — the median of the samples
+# (default $SPARK_GRAFT_BENCH_REPS) of building the DataFrame and
+# count()-ing it (a builder returning anything else, an index build,
+# is timed as is) — or a scale runner returning its own record.
+# "queries" is the headline: `value` is the sum of its medians. The
+# other sections are timed outside it so the cross-round series stays
+# comparable; a failing one records {"error": ...} instead.
+# --------------------------------------------------------------------
+SECTIONS = {
+    # one per operator family: relational joins/agg, event agg,
+    # sessionize, funnel, paths, retention, segments, property and
+    # histogram, dedup, ANN (ann_topk is the brute-force recall
+    # oracle; LSH/IVF are the scale paths), text
+    "queries": [
+        ("tpch_q1", E.q_tpch_q1),
+        ("tpch_q3", E.q_tpch_q3),
+        ("tpch_q5", E.q_tpch_q5),
+        ("event_agg_by_type", E.q_event_agg_by_type),
+        ("session_counts", E.q_session_counts),
+        ("session_stats", E.q_session_stats),
+        ("funnel_signup_purchase", E.q_funnel_signup_purchase),
+        ("next_event_transitions", E.q_next_event_transitions),
+        ("weekly_retention", E.q_weekly_retention),
+        ("segment_counts", E.q_segment_counts),
+        ("property_counts_by_segment", E.q_property_counts_by_segment),
+        ("histogram_weeks_since", E.q_histogram_weeks_since),
+        ("dedup_exact", E.q_dedup_exact),
+        ("dedup_minhash", _lsh_candidates),
+        ("ann_topk", E.q_ann_topk),
+        ("ann_lsh", _lsh_topk),
+        ("ann_ivf", _ivf_topk),
+        ("quality_score", E.q_quality_score),
+    ],
+    "pipeline_r6": [
+        ("repetition_signals", E.q_repetition_signals),
+        ("contamination_check", E.q_contamination_check),
+        ("token_budget_select", E.q_token_budget_select),
+        ("substring_dup_pairs", E.q_substring_dup_pairs),
+    ],
+    # the retention keys time the production retention_filter paths;
+    # dedup_clusters is multi-job (iterative convergence), so its one
+    # sample is the honest number; lm_perplexity scores 4/5 of the
+    # corpus against a bigram LM trained on the other 1/5
+    "pipeline_r7": [
+        ("retention_cull", E.q_retention_cull),
+        ("retention_cap", E.q_retention_cap),
+        ("pack_sequences", E.q_pack_sequences),
+        ("mixture_select", E.q_mixture_select),
+        ("dedup_clusters", _lsh_clusters, 1),
+        ("lm_perplexity", E.q_lm_perplexity),
+        ("dsir_weights", E.q_dsir_weights),
+    ],
+    # ann_pq times the production query path (prebuilt index + numpy
+    # ADC scan); the one-off codebook training + corpus encode is the
+    # ingest-time cost, timed once as ann_pq_build
+    "pipeline_r8": [
+        ("ann_pq_build", _pq_build, 1),
+        ("tfidf_top_terms", E.q_tfidf_top_terms),
+        ("bm25_search", E.q_bm25_search),
+        ("winnow_fingerprints", E.q_winnow_fingerprints),
+        ("winnow_matches", E.q_winnow_matches),
+        ("containment_pairs", E.q_containment_pairs),
+        ("char_entropy", E.q_char_entropy),
+        ("readability", E.q_readability),
+        ("vocab_growth", E.q_vocab_growth),
+        ("embedding_centroids", E.q_embedding_centroids),
+        ("sample_per_stratum", E.q_sample_per_stratum),
+        ("source_overlap", E.q_source_overlap),
+        ("collocations", E.q_collocations),
+        ("zipf_fit", E.q_zipf_fit),
+        ("kneser_ney_score", E.q_kneser_ney_score),
+        ("dup_span_fraction", E.q_dup_span_fraction),
+        ("keyword_tags", E.q_keyword_tags),
+        ("leakage_safe_split", _lsh_leakage_split),
+        ("gopher_quality", E.q_gopher_quality),
+        ("lexical_diversity", E.q_lexical_diversity),
+        ("oov_rate", E.q_oov_rate),
+        ("chunk_windows", E.q_chunk_windows),
+        ("dsir_resample", E.q_dsir_resample),
+        ("embedding_gram", E.q_embedding_gram),
+        ("ann_pq", _pq_topk),
+    ],
+    "pipeline_r9": [
+        ("remove_dup_spans", E.q_remove_dup_spans),
+        ("nearest_dup", E.q_nearest_dup),
+        ("perplexity_buckets", E.q_perplexity_buckets),
+        ("ngram_coverage", E.q_ngram_coverage),
+        ("lang_confusion", E.q_lang_confusion),
+        ("cross_source_dups", E.q_cross_source_dups),
+    ],
+    "pipeline_r9b": [
+        ("ngram_novelty", E.q_ngram_novelty),
+        ("quality_funnel", E.q_quality_funnel),
+        ("cooccur_pmi", E.q_cooccur_pmi),
+        ("shard_manifest", E.q_shard_manifest),
+        ("epoch_shuffle", E.q_epoch_shuffle),
+        ("embedding_outliers", E.q_embedding_outliers),
+        ("dataset_card", E.q_dataset_card),
+    ],
+    "pipeline_r9c": [
+        ("hard_negatives", E.q_hard_negatives),
+        ("knn_agreement", E.q_knn_agreement),
+        ("knn_agreement_cand", _knn_agreement_cand),
+        ("temperature_weights", E.q_temperature_weights),
+        ("boilerplate_affixes", E.q_boilerplate_affixes),
+        ("embedding_drift", E.q_embedding_drift),
+        ("length_histogram", E.q_length_histogram),
+        ("dup_cosine_check", E.q_dup_cosine_check),
+        ("source_divergence", E.q_source_divergence),
+    ],
+    "pipeline_r10": [
+        ("dedup_lines", E.q_dedup_lines),
+        ("pii_report", E.q_pii_report),
+        ("mink_prob", E.q_mink_prob),
+        ("corpus_diff", E.q_corpus_diff),
+        ("asof_last_purchase", E.q_asof_last_purchase),
+        ("events_in_purchase_window", E.q_events_in_purchase_window),
+    ],
+    "pipeline_r11": [
+        ("time_rollup", E.q_time_rollup),
+        ("asof_nearest_purchase", E.q_asof_nearest_purchase),
+        ("overlapping_activity_windows", E.q_overlapping_activity_windows),
+        ("nb_quality_scores", E.q_nb_quality_scores),
+        ("source_quality_cap", E.q_source_quality_cap),
+        ("pii_positive", E.q_pii_positive),
+        ("title_typo_pairs", E.q_title_typo_pairs),
+        ("approx_users_per_day", E.q_approx_users_per_day),
+        ("rollup_unique_users", E.q_rollup_unique_users),
+        ("cms_token_hitters", E.q_cms_token_hitters),
+        ("bloom_semijoin_urgent", E.q_bloom_semijoin_urgent),
+        ("doc_length_quantiles_sketch", E.q_doc_length_quantiles_sketch),
+        ("segment_jaccard_kmv", E.q_segment_jaccard_kmv),
+        ("rollup_value_quantiles", E.q_rollup_value_quantiles),
+        ("source_vocab_overlap", E.q_source_vocab_overlap),
+        ("sliding_users_24h", E.q_sliding_users_24h),
+    ],
+    "pipeline_r12": [
+        ("sliding_value_p95_24h", E.q_sliding_value_p95_24h),
+        ("sliding_user_rates_24h", E.q_sliding_user_rates_24h),
+        ("sliding_segment_jaccard_24h", E.q_sliding_segment_jaccard_24h),
+    ],
+    # the NB classifier runs its full train+score per sample (the
+    # model build is part of the query); main_content / mojibake_repair
+    # run over inline fixtures and would time only session overhead
+    "pipeline_r13": [
+        ("rollup_user_rates", E.q_rollup_user_rates),
+        ("lang_id_nb", E.q_lang_id_nb),
+        ("lang_nb_confusion", E.q_lang_nb_confusion),
+    ],
+    "hll_scale": _hll_scale,
+    "sliding_scale": _sliding_scale,
+    # over the real tables; the fixture-backed URL/robots/markdown keys
+    # would time only session overhead — url_scale is their evidence
+    "pipeline_r14": [
+        ("filter_agreement", E.q_filter_agreement),
+        ("embedding_health", E.q_embedding_health),
+    ],
+    "url_scale": _url_scale,
+    "sketch_scale": _sketch_scale,
+    "layout_scale": _layout_scale,
+    "loader_scale": _loader_scale,
+    # before ann_scale: its 200k brute-force scan leaves enough JVM
+    # heap/GC pressure to distort these sub-second timings
+    "skew": _skew,
+    "ann_scale": _ann_scale,
+    "pipeline_media": _pipeline_media,
+    "scaling": _scaling,
+}
+
+HEADLINE = [name for name, *_ in SECTIONS["queries"]]
+
+# the only sections that can be switched off (=0), for a quick run
+_SWITCHES = {
+    "skew": "SPARK_GRAFT_SKEW",
+    "ann_scale": "SPARK_GRAFT_ANN_SCALE",
+    "scaling": "SPARK_GRAFT_SCALING",
+}
 
 
 def _calibration(reps: int = 3) -> float:
@@ -197,70 +493,66 @@ def _calibration(reps: int = 3) -> float:
     return round(statistics.median(samples), 3)
 
 
-def _ann_inputs_for_pq(spark, sf_dir):
-    from pyspark.sql import functions as F
+def _time_entries(spark, sf_dir, entries, reps: int) -> dict[str, float]:
+    """Median seconds per entry. A fresh DataFrame is built inside the
+    timed region for every sample, so no plan/result caching hides the
+    real cost; count() forces full execution without driver-side
+    materialization of wide results."""
+    out = {}
+    for name, builder, *n_samples in entries:
+        samples = []
+        for _ in range(n_samples[0] if n_samples else reps):
+            t0 = time.time()
+            res = builder(spark, sf_dir)
+            if isinstance(res, DataFrame):
+                res.count()
+            samples.append(time.time() - t0)
+        out[name] = round(statistics.median(samples), 3)
+    return out
 
-    from openset_spark.sources.tables import load_table
 
-    embs = load_table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    qs = embs.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return embs, qs
+def _guarded(run) -> dict:
+    """An auxiliary section never breaks the headline line: a failed
+    bench artifact is worse than a failed section."""
+    try:
+        return run()
+    except Exception as e:  # pragma: no cover - defensive
+        return {"error": f"{type(e).__name__}: {e}"[:300]}
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
+    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+    off = {s for s, var in _SWITCHES.items() if os.environ.get(var, "1") == "0"}
     spark = get_spark("openset-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = {**entry_mod.queries(), **_bench_impls()}
 
     # warm the JVM + parquet footers of every table the suite touches
     # with trivial actions (each query still pays its own planning and
     # codegen — this only removes first-touch file-listing noise)
-    from openset_spark.sources.tables import load_table
-
     for t in ("lineitem", "orders", "customer", "events", "documents",
               "embeddings"):
         load_table(spark, sf_dir, t).count()
 
-    # tenancy ruler (VERDICT r7 ask #8 / r8 ask #5): fixed CPU-bound
-    # work, timed before any Spark query so GC/JIT state can't skew it
+    # tenancy ruler: fixed CPU-bound work, timed before any Spark query
+    # so GC/JIT state can't skew it
     calibration = _calibration()
 
-    # Each query runs REPS times; we report the per-query MEDIAN so a
-    # single noisy run (GC pause, sandbox contention) can't swing the
-    # gate metric.  A fresh DataFrame is built per repetition so no
-    # plan/result caching hides the real cost.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        samples = []
-        for _ in range(reps):
-            t0 = time.time()
-            # count() forces full execution of the plan without
-            # driver-side materialization of wide results
-            qs[name](spark, sf_dir).count()
-            samples.append(time.time() - t0)
-        timings[name] = round(statistics.median(samples), 3)
-
-    total = round(sum(timings.values()), 3)
+    timings = _time_entries(spark, sf_dir, SECTIONS["queries"], reps)
     out = {
         "metric": "headline_suite_wall_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "calibration_sec": calibration,
     }
-    # Calibration gate (VERDICT r9 ask #8): the quiet-host series
-    # median of the busy-loop ruler is ~0.49 s. A >10% deviation means
-    # the host is contended (or throttled) and every Spark timing in
-    # this record scales with it — flag the record so a cross-round
-    # comparison discounts it instead of reading noise as regression.
+    # Calibration gate: the quiet-host series median of the busy-loop
+    # ruler is ~0.49 s. A >10% deviation means the host is contended
+    # (or throttled) and every Spark timing in this record scales with
+    # it — flag the record so a cross-round comparison discounts it
+    # instead of reading noise as regression.
     _CAL_BASELINE = 0.49
     if abs(calibration - _CAL_BASELINE) > 0.1 * _CAL_BASELINE:
         out["calibration_warning"] = (
@@ -269,479 +561,15 @@ def main() -> None:
             "discount absolute timings, per-query ratios stay usable"
         )
 
-    # Round-6 pipeline additions, timed OUTSIDE the headline so the
-    # cross-round per-query series (and `value`) stays comparable.
-    # Same median-of-reps machinery. Disable with SPARK_GRAFT_R6=0.
-    if os.environ.get("SPARK_GRAFT_R6", "1") != "0":
-        try:
-            extra = {}
-            for name in (
-                "repetition_signals",
-                "contamination_check",
-                "token_budget_select",
-                "substring_dup_pairs",
-            ):
-                samples = []
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r6"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r6"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Round-7 pipeline additions, same contract. The retention keys
-    # time the production retention_filter paths; dedup_clusters runs
-    # the production pin from _bench_impls (clusters over LSH
-    # candidates) and is inherently multi-job (iterative
-    # convergence), so its single wall-clock sample is the honest
-    # number. lm_perplexity scores 4/5 of the corpus against a
-    # bigram LM trained on the other 1/5. Disable with
-    # SPARK_GRAFT_R7=0.
-    if os.environ.get("SPARK_GRAFT_R7", "1") != "0":
-        try:
-            extra = {}
-            for name in (
-                "retention_cull",
-                "retention_cap",
-                "pack_sequences",
-                "mixture_select",
-                "dedup_clusters",
-                "lm_perplexity",
-                "dsir_weights",
-            ):
-                samples = []
-                for _ in range(1 if name == "dedup_clusters" else reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r7"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r7"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Round-8 pipeline additions (VERDICT r7 ask: bench the IR keys),
-    # same contract. tfidf_top_terms ranks every doc's top-5 terms
-    # (the full-corpus indexing pass); bm25_search is the per-query
-    # retrieval path. Disable with SPARK_GRAFT_R8=0.
-    if os.environ.get("SPARK_GRAFT_R8", "1") != "0":
-        try:
-            extra = {}
-            # ann_pq below times the PRODUCTION query path (prebuilt
-            # index + numpy ADC scan); the one-off codebook training +
-            # corpus encode is the ingest-time cost, timed here
-            t0 = time.time()
-            _pq_build(spark, sf_dir)
-            extra["ann_pq_build"] = round(time.time() - t0, 3)
-            for name in (
-                "tfidf_top_terms",
-                "bm25_search",
-                "winnow_fingerprints",
-                "winnow_matches",
-                "containment_pairs",
-                "char_entropy",
-                "readability",
-                "vocab_growth",
-                "embedding_centroids",
-                "sample_per_stratum",
-                "source_overlap",
-                "collocations",
-                "zipf_fit",
-                "kneser_ney_score",
-                "dup_span_fraction",
-                "keyword_tags",
-                "leakage_safe_split",
-                "gopher_quality",
-                "lexical_diversity",
-                "oov_rate",
-                "chunk_windows",
-                "dsir_resample",
-                "embedding_gram",
-                "ann_pq",
-            ):
-                samples = []
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r8"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r8"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Round-9 additions: the Lee-et-al span REMOVAL pass, the
-    # nearest-duplicate report (exact Jaccard over capped substring
-    # candidates), CCNet perplexity buckets, benchmark n-gram
-    # coverage. Disable with SPARK_GRAFT_R9=0.
-    if os.environ.get("SPARK_GRAFT_R9", "1") != "0":
-        try:
-            extra = {}
-            for name in (
-                "remove_dup_spans",
-                "nearest_dup",
-                "perplexity_buckets",
-                "ngram_coverage",
-                "lang_confusion",
-                "cross_source_dups",
-            ):
-                samples = []
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r9"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r9"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Round-9 second-session additions: novelty attribution, the
-    # quality funnel, skip-gram PMI, the writer manifests/data-loader
-    # shuffle, embedding outliers, the dataset card.
-    # Disable with SPARK_GRAFT_R9B=0.
-    if os.environ.get("SPARK_GRAFT_R9B", "1") != "0":
-        try:
-            extra = {}
-            for name in (
-                "ngram_novelty",
-                "quality_funnel",
-                "cooccur_pmi",
-                "shard_manifest",
-                "epoch_shuffle",
-                "embedding_outliers",
-                "dataset_card",
-            ):
-                samples = []
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r9b"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r9b"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Round-9 third-session additions: label-aware kNN (hard-negative
-    # mining, label agreement), mixture temperature weights,
-    # boilerplate affixes, the embedding-drift monitor, the
-    # sequence-length histogram. Disable with SPARK_GRAFT_R9C=0.
-    if os.environ.get("SPARK_GRAFT_R9C", "1") != "0":
-        try:
-            extra = {}
-            for name in (
-                "hard_negatives",
-                "knn_agreement",
-                "knn_agreement_cand",
-                "temperature_weights",
-                "boilerplate_affixes",
-                "embedding_drift",
-                "length_histogram",
-                "dup_cosine_check",
-                "source_divergence",
-            ):
-                samples = []
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r9c"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r9c"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Round-10 additions: line-level dedup, the PII audit, Min-K%
-    # scoring, snapshot diffs, and the temporal joins.
-    # Disable with SPARK_GRAFT_R10=0.
-    if os.environ.get("SPARK_GRAFT_R10", "1") != "0":
-        try:
-            extra = {}
-            for name in (
-                "dedup_lines",
-                "pii_report",
-                "mink_prob",
-                "corpus_diff",
-                "asof_last_purchase",
-                "events_in_purchase_window",
-            ):
-                samples = []
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r10"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r10"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Round-11 additions: time_rollup (GROUPING SETS plan), nearest
-    # as-of, the interval-overlap join, the NB quality classifier,
-    # and the domain cap. Disable with SPARK_GRAFT_R11=0.
-    if os.environ.get("SPARK_GRAFT_R11", "1") != "0":
-        try:
-            extra = {}
-            for name in (
-                "time_rollup",
-                "asof_nearest_purchase",
-                "overlapping_activity_windows",
-                "nb_quality_scores",
-                "source_quality_cap",
-                "pii_positive",
-                "title_typo_pairs",
-                "approx_users_per_day",
-                "rollup_unique_users",
-                "cms_token_hitters",
-                "bloom_semijoin_urgent",
-                "doc_length_quantiles_sketch",
-                "segment_jaccard_kmv",
-                "rollup_value_quantiles",
-                "source_vocab_overlap",
-                "sliding_users_24h",
-            ):
-                samples = []
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r11"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r11"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Round-12 additions: the sliding-quantiles twin. Disable with
-    # SPARK_GRAFT_R12=0.
-    if os.environ.get("SPARK_GRAFT_R12", "1") != "0":
-        try:
-            extra = {}
-            for name in ("sliding_value_p95_24h", "sliding_user_rates_24h",
-                         "sliding_segment_jaccard_24h"):
-                samples = []
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r12"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r12"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Round-13 additions: the CMS time rollup plus the char-n-gram NB
-    # language classifier (full train+score per rep — the model build
-    # is part of the measured query). main_content / mojibake_repair
-    # run over inline fixtures and would measure only session
-    # overhead, so they stay out. Disable with SPARK_GRAFT_R13=0.
-    if os.environ.get("SPARK_GRAFT_R13", "1") != "0":
-        try:
-            extra = {}
-            for name in ("rollup_user_rates", "lang_id_nb",
-                         "lang_nb_confusion"):
-                samples = []
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r13"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r13"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # HLL scale evidence: grouped approx_distinct (<= m rows per group
-    # shuffled) vs exact countDistinct (every (group, user) pair
-    # shuffled) on a 6M-row / 500k-user synthetic corpus; reports the
-    # speedup and the worst per-group relative error. Disable with
-    # SPARK_GRAFT_HLL=0.
-    if os.environ.get("SPARK_GRAFT_HLL", "1") != "0":
-        try:
-            from openset_spark.pipeline.hll_bench import run_hll_bench
-
-            out["hll_scale"] = run_hll_bench(spark)
-        except Exception as e:  # pragma: no cover - defensive
-            out["hll_scale"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Sliding-fold scale evidence: 72 trailing-window answers from
-    # ONE scan (stored partials) vs one full re-sketch scan per slide
-    # point — identical answers by the fold law, so this measures
-    # pure scan count. Disable with SPARK_GRAFT_SLIDING=0.
-    if os.environ.get("SPARK_GRAFT_SLIDING", "1") != "0":
-        try:
-            from openset_spark.pipeline.sliding_bench import (
-                run_sliding_bench,
+    for name, body in SECTIONS.items():
+        if name == "queries" or name in off:
+            continue
+        if callable(body):
+            out[name] = _guarded(lambda: body(spark))
+        else:
+            out[name] = _guarded(
+                lambda: _time_entries(spark, sf_dir, body, reps)
             )
-
-            out["sliding_scale"] = run_sliding_bench(spark)
-        except Exception as e:  # pragma: no cover - defensive
-            out["sliding_scale"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Round-14 additions over the REAL tables: the filter-ensemble
-    # agreement report (three full corpus filter passes + the joint
-    # reduce) and the embedding sanity audit. Fixture-backed r14
-    # keys (urls/robots/markdown) measure only session overhead at
-    # sf and stay out — url_scale below is their scale evidence.
-    # Disable with SPARK_GRAFT_R14=0.
-    if os.environ.get("SPARK_GRAFT_R14", "1") != "0":
-        try:
-            extra = {}
-            for name in ("filter_agreement", "embedding_health"):
-                samples = []
-                for _ in range(reps):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-                extra[name] = round(statistics.median(samples), 3)
-            out["pipeline_r14"] = extra
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_r14"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # URL-suite scale evidence (r14): canonicalization throughput
-    # (steady-state codegen projection — median hides the one-time
-    # JIT compile a cluster amortizes, surfaced as parse_first_sec),
-    # URL-level dedup (one window shuffle) and the zero-join domain
-    # link graph, all on 2M synthetic URLs/HTML built JVM-side.
-    # Disable with SPARK_GRAFT_URL=0.
-    if os.environ.get("SPARK_GRAFT_URL", "1") != "0":
-        try:
-            from openset_spark.pipeline.url_bench import run_url_bench
-
-            out["url_scale"] = run_url_bench(spark)
-        except Exception as e:  # pragma: no cover - defensive
-            out["url_scale"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Bloom + CMS scale evidence: selective-semijoin prune power and
-    # constant-shuffle frequency grids. Disable with SPARK_GRAFT_SKETCH=0.
-    if os.environ.get("SPARK_GRAFT_SKETCH", "1") != "0":
-        try:
-            from openset_spark.pipeline.sketch_bench import run_sketch_bench
-
-            out["sketch_scale"] = run_sketch_bench(spark)
-        except Exception as e:  # pragma: no cover - defensive
-            out["sketch_scale"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Z-order layout evidence: candidate-file counts from parquet
-    # footer stats for a ~1% range predicate on BOTH indexed columns,
-    # z-ordered vs random layout. Disable with SPARK_GRAFT_LAYOUT=0.
-    if os.environ.get("SPARK_GRAFT_LAYOUT", "1") != "0":
-        try:
-            import tempfile
-
-            from openset_spark.sources.layout import (
-                write_hilbert,
-                write_zordered,
-                zorder_candidate_files,
-            )
-
-            import shutil
-
-            d = tempfile.mkdtemp(prefix="zorder_bench_")
-            big = spark.range(2_000_000).selectExpr(
-                "CAST(xxhash64(id) % 1000000 AS LONG) AS x",
-                "CAST(xxhash64(id + 7) % 1000000 AS LONG) AS y",
-                "id AS payload",
-            )
-            t0 = time.time()
-            write_zordered(big, f"{d}/z", ["x", "y"], bits=10, n_files=64)
-            zsec = time.time() - t0
-            t0 = time.time()
-            write_hilbert(big, f"{d}/h", ["x", "y"], bits=10, n_files=64)
-            hsec = time.time() - t0
-            big.repartition(64).write.mode("overwrite").parquet(f"{d}/p")
-            rec = {
-                "write_zordered_sec": round(zsec, 3),
-                "write_hilbert_sec": round(hsec, 3),
-            }
-            for col in ("x", "y"):
-                hz, tz, rz, rtz = zorder_candidate_files(
-                    f"{d}/z", col, 10000, 30000
-                )
-                hh, th, rh, rth = zorder_candidate_files(
-                    f"{d}/h", col, 10000, 30000
-                )
-                hp, tp, rp, rtp = zorder_candidate_files(
-                    f"{d}/p", col, 10000, 30000
-                )
-                rec[f"{col}_files_zordered"] = f"{hz}/{tz}"
-                rec[f"{col}_files_hilbert"] = f"{hh}/{th}"
-                rec[f"{col}_files_plain"] = f"{hp}/{tp}"
-                rec[f"{col}_rows_pct_zordered"] = round(100 * rz / rtz, 1)
-                rec[f"{col}_rows_pct_hilbert"] = round(100 * rh / rth, 1)
-                rec[f"{col}_rows_pct_plain"] = round(100 * rp / rtp, 1)
-            out["layout_scale"] = rec
-            shutil.rmtree(d, ignore_errors=True)
-        except Exception as e:  # pragma: no cover - defensive
-            out["layout_scale"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Loader-scale evidence: distributed prefix-sum rank vs the naive
-    # single-task global window on a 6M-row synthetic corpus, plus an
-    # exact rank-equality spot check. Disable with SPARK_GRAFT_LOADER=0.
-    if os.environ.get("SPARK_GRAFT_LOADER", "1") != "0":
-        try:
-            from openset_spark.pipeline.loader_bench import run_loader_bench
-
-            out["loader_scale"] = run_loader_bench(spark)
-        except Exception as e:  # pragma: no cover - defensive
-            out["loader_scale"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Skew evidence: one user owns 30% of a 6M-row synthetic corpus;
-    # times the skew-bound window first-row vs the salted/algebraic
-    # rewrite (and shows scalar aggs don't need salting — partial agg
-    # absorbs them). Runs BEFORE the ann section: the 200k brute-force
-    # scan there leaves enough JVM heap/GC pressure to distort these
-    # sub-second timings. Failure-isolated; disable with
-    # SPARK_GRAFT_SKEW=0.
-    if os.environ.get("SPARK_GRAFT_SKEW", "1") != "0":
-        try:
-            from openset_spark.operators.skew_bench import run_skew_bench
-
-            out["skew"] = run_skew_bench(spark)
-        except Exception as e:  # pragma: no cover - defensive
-            out["skew"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # ANN scale separation: the sf0.1 embeddings table (~2k vectors) is
-    # below the crossover where bucketed ANN beats brute force, so the
-    # separation is shown on a cached 200k synthetic corpus with
-    # ingest-time LSH/IVF indexes (query paths timed; recall vs the
-    # exact oracle reported). Not part of `value` — it is a different
-    # dataset. Disable with SPARK_GRAFT_ANN_SCALE=0.
-    if os.environ.get("SPARK_GRAFT_ANN_SCALE", "1") != "0":
-        # never let the auxiliary section break the headline line:
-        # a failed bench artifact is worse than a missing field
-        try:
-            from openset_spark.pipeline.ann_bench import run_scale_bench
-
-            # reps=2 (min): the approximate-path timings are ~2s each
-            # and a single rep can eat a GC pause from the preceding
-            # 50s brute-force scan (observed 1.9s -> 12.4s once)
-            out["ann_scale"] = run_scale_bench(spark, reps=2)
-        except Exception as e:  # pragma: no cover - defensive
-            out["ann_scale"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Media-path throughput (r10): decode_images / image_hashes /
-    # audio_feature_rows over cached generated payloads at a fixed
-    # byte budget — MB/s of payload through the Arrow mapInPandas
-    # tier. Disable with SPARK_GRAFT_MEDIA=0.
-    if os.environ.get("SPARK_GRAFT_MEDIA", "1") != "0":
-        try:
-            from openset_spark.pipeline.media_bench import run_media_bench
-
-            out["pipeline_media"] = run_media_bench(spark)
-        except Exception as e:  # pragma: no cover - defensive
-            out["pipeline_media"] = {"error": f"{type(e).__name__}: {e}"[:300]}
-
-    # Core-scaling evidence (r16): a generated multi-file input whose
-    # scan/shuffle stages actually fan out — the signal the
-    # single-row-group sf0.1 headline inputs cannot provide (8 cores
-    # beat 32 on every headline query; this section's ratio across
-    # the driver's core-count runs separates parallel work from
-    # scheduler overhead). Additions-only: headline queries, sinks
-    # and the compact line are untouched. Disable with
-    # SPARK_GRAFT_SCALING=0.
-    if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        try:
-            from openset_spark.pipeline.scaling_bench import (
-                run_scaling_bench,
-            )
-
-            out["scaling"] = run_scaling_bench(spark)
-        except Exception as e:  # pragma: no cover - defensive
-            out["scaling"] = {"error": f"{type(e).__name__}: {e}"[:300]}
 
     # full record first, COMPACT headline last: a tail-capped consumer
     # keeps the end of stdout, so the short final line always survives
@@ -755,10 +583,9 @@ def main() -> None:
         "sf": out["sf"],
         "calibration_sec": out["calibration_sec"],
     }
-    # r11 lesson: the warning fired (cal 0.652) but lived only on the
-    # full record, which the driver's tail cap truncated — the one
-    # field a cross-round reader needs most must ride the compact
-    # line. Short form here so the line stays under the tail cap.
+    # the warning must ride the compact line too: the full record is
+    # the one a tail cap truncates. Short form so the line stays under
+    # the cap.
     if "calibration_warning" in out:
         compact["calibration_warning"] = (
             f"host contended: cal {out['calibration_sec']} vs 0.49 "

@@ -7,10 +7,7 @@ Five tiers, all shuffle-bounded (no O(n^2) cross joins at scale):
              join. Candidate pairs only form inside a band bucket, so
              the join is a hash join on (band_idx, band_hash) whose
              fan-out is controlled by band width. All signature math
-             is JVM expressions (xxhash64 + min aggregates) — an
-             Arrow slot-hash pass was built, proven bit-identical,
-             measured SLOWER, and deliberately not wired (r16; see
-             minhash_signature).
+             is JVM expressions (xxhash64 + min aggregates).
 - simhash:   64-bit simhash via per-bit token votes (JVM aggregate),
              near-dup candidates = equal 16-bit simhash blocks
              (hamming<=3 guarantee via 4-block pigeonhole).
@@ -73,98 +70,6 @@ def exact_dedup(
 
 
 # ---------- minhash + LSH ----------
-# Bit-identical NumPy replication of Spark's xxhash64 over
-# (bigint, int-literal) children with the default seed 42:
-# xxhash64(h, i) = XXH64.hashInt(i, XXH64.hashLong(h, 42)). The
-# constants and op sequence mirror catalyst's XXH64.java exactly;
-# uint64 arithmetic wraps like Java longs and the final .view(int64)
-# reinterprets the bits the way Spark returns them.
-# tests/test_arrow_minhash.py locks slot values == the SQL expression
-# on randomized inputs (including the int64 edge values).
-_XXH_P1 = 0x9E3779B185EBCA87
-_XXH_P2 = 0xC2B2AE3D27D4EB4F
-_XXH_P3 = 0x165667B19E3779F9
-_XXH_P4 = 0x85EBCA77C2B2AE63
-_XXH_P5 = 0x27D4EB2F165667C5
-
-
-def _np_xxh64_fmix(h, np):
-    h = h ^ (h >> np.uint64(33))
-    h = h * np.uint64(_XXH_P2)
-    h = h ^ (h >> np.uint64(29))
-    h = h * np.uint64(_XXH_P3)
-    h = h ^ (h >> np.uint64(32))
-    return h
-
-
-def _np_xxh64_long(v, seed, np):
-    """XXH64.hashLong(v, seed) vectorized over uint64 ``v``."""
-    h = seed + np.uint64(_XXH_P5) + np.uint64(8)
-    k1 = v * np.uint64(_XXH_P2)
-    k1 = ((k1 << np.uint64(31)) | (k1 >> np.uint64(33))) * np.uint64(_XXH_P1)
-    h = h ^ k1
-    h = ((h << np.uint64(27)) | (h >> np.uint64(37))) * np.uint64(
-        _XXH_P1
-    ) + np.uint64(_XXH_P4)
-    return _np_xxh64_fmix(h, np)
-
-
-def _np_xxh64_int(i, seed, np):
-    """XXH64.hashInt(i, seed) for a scalar int ``i`` against a
-    vectorized uint64 ``seed`` (the per-row chained hash)."""
-    h = seed + np.uint64(_XXH_P5) + np.uint64(4)
-    h = h ^ np.uint64((i & 0xFFFFFFFF) * _XXH_P1 & 0xFFFFFFFFFFFFFFFF)
-    h = ((h << np.uint64(23)) | (h >> np.uint64(41))) * np.uint64(
-        _XXH_P2
-    ) + np.uint64(_XXH_P3)
-    return _np_xxh64_fmix(h, np)
-
-
-def _arrow_minhash_slots(
-    exploded: DataFrame, id_col: str, num_hashes: int
-) -> DataFrame | None:
-    """Per-batch PARTIAL MinHash slots (id, s0..s{n-1}) via
-    mapInPandas over the (id, _h) shingle-hash stream. NOT wired into
-    minhash_signature — a MEASURED NEGATIVE RESULT kept with its
-    fences so the next round doesn't re-try it blind (see the
-    rejection numbers in minhash_signature): the vectorized form
-    pays 64 slots x ~10 full-array memory passes + the Python
-    boundary, losing to whole-stage codegen's fused in-register
-    per-row loop both locally and at scale. Bit-identity (the part
-    that IS proven and reusable): slot values replicate the SQL
-    expression exactly (see the XXH64 notes above) and signed-int64
-    min is associative/commutative, so min(partial mins) ==
-    min(all) — locked by tests/test_arrow_minhash.py. Returns None
-    when the id type is not a plain primitive."""
-    id_type = exploded.schema[id_col].dataType.simpleString()
-    if "<" in id_type:  # struct/array/map ids: stay on the JVM path
-        return None
-
-    def _slots(batches):
-        import numpy as np
-        import pandas as pd
-
-        u42 = np.uint64(42)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h = pdf["_h"].to_numpy(dtype=np.int64).view(np.uint64)
-            base = _np_xxh64_long(h, u42, np)
-            mat = np.empty((len(h), num_hashes), dtype=np.int64)
-            for i in range(num_hashes):
-                mat[:, i] = _np_xxh64_int(i, base, np).view(np.int64)
-            gdf = pd.DataFrame(
-                {f"s{i}": mat[:, i] for i in range(num_hashes)}
-            )
-            gdf.insert(0, id_col, pdf[id_col].values)
-            yield gdf.groupby(id_col, sort=False).min().reset_index()
-
-    ddl = f"`{id_col}` {id_type}, " + ", ".join(
-        f"s{i} bigint" for i in range(num_hashes)
-    )
-    return exploded.mapInPandas(_slots, ddl)
-
-
 def minhash_signature(
     df: DataFrame,
     text_col: str = "text",
@@ -189,20 +94,10 @@ def minhash_signature(
             F.array_distinct(shingles_from_tokens(F.col("_toks"), shingle_n))
         ).alias("shingle"),
     ).select(F.col(id_col), F.xxhash64("shingle").alias("_h"))
-    # The 64 slot hashes stay JVM expressions DELIBERATELY (r16,
-    # tried and rejected with numbers): an Arrow pass with
-    # bit-identical NumPy XXH64 replication + per-batch partial mins
-    # (_arrow_minhash_slots below, equality-fenced in
-    # tests/test_arrow_minhash.py) measured SLOWER in alternated
-    # sf0.1 A/Bs (dedup_minhash 1.44s JVM vs 2.23s Arrow;
-    # dedup_clusters 1.74s vs 2.93s medians), and the loss is
-    # structural, not an SF artifact: whole-stage codegen evaluates
-    # all 64 hashes per row in registers within ONE pass over the
-    # shingle stream, while the vectorized form pays 64 slots x ~10
-    # full-array memory passes (measured 4.6s/1M rows NumPy vs the
-    # fused JVM loop's ~0.3s) plus the Python boundary. The Arrow
-    # helper is kept (with its fences) as the documented negative
-    # result so the next round doesn't re-try it blind.
+    # The 64 slot hashes stay JVM expressions: whole-stage codegen
+    # evaluates all of them per row in ONE fused pass over the shingle
+    # stream. A bit-identical Arrow/NumPy slot pass measured slower
+    # (OPTIMIZATION_r16.md §4).
     #
     # ALL slot aggregates in ONE expression string (an array of
     # min(xxhash64(...)) aggregates): building them as 64 separate

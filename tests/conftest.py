@@ -20,8 +20,9 @@ TEST_SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 # were measured from a full --durations run (committed in
 # plans/r16/pytest_durations_r16.txt) and keep EVERY operator family
 # and EVERY bit-equality fence in the default tier:
-#   * bit-equality fences stay default (arrow scorer/minhash/vector
-#     unroll, pq numpy-vs-sql, cumsum/pack oracles, histogram oracle);
+#   * bit-equality fences stay default (arrow scorer, minhash
+#     signature vs its verbatim slot aggregate, vector unroll, pq
+#     numpy-vs-sql, cumsum/pack oracles, histogram oracle);
 #   * each `slow` entry is a scale-evidence, fuzz-vs-naive, or
 #     end-to-end composite whose operator keeps a cheaper default
 #     test or a driver-window oracle replay;
@@ -89,7 +90,7 @@ _ORACLE_RE = re.compile(
 def pytest_collection_modifyitems(config, items):
     import __spark_entry__ as entry
 
-    window = set(list(entry.queries())[: entry._DRIVER_WINDOW])
+    window = {q.name for q in entry.REGISTRY[: entry._DRIVER_WINDOW]}
     slow = pytest.mark.slow
     strict = pytest.mark.strict_oracle
     for item in items:

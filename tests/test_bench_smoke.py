@@ -1,8 +1,9 @@
 """bench.py smoke: the driver runs `python bench.py` per round and a
 broken bench (import error, renamed registry key, bad JSON) would cost
 the round's perf artifact. Run the real script end-to-end at sf0.001
-with one rep and the auxiliary sections off (~40s), and require one
-parseable JSON line with the contract fields."""
+with one rep and the three heavy sections off, and require the two
+parseable JSON lines with the contract fields and every other section
+of bench.SECTIONS, in order."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ import json
 import os
 import subprocess
 import sys
+
+import bench
 
 
 def test_bench_script_emits_contract_json():
@@ -53,6 +56,11 @@ def test_bench_script_emits_contract_json():
     # the COMPACT line too — the full record gets tail-capped away.
     assert ("calibration_warning" in out) == ("calibration_warning" in full)
     assert len(json_lines[1]) < 1024  # survives a 1 KiB tail cap
+    header = {"metric", "value", "unit", "sf", "calibration_sec",
+              "calibration_warning"}
+    assert [k for k in full if k not in header] == [
+        s for s in bench.SECTIONS if s not in {"skew", "ann_scale", "scaling"}
+    ]
     out = full  # aux sections live on the full record
     # the r6/r7 sections ride along even in smoke mode
     assert set(out.get("pipeline_r6", {})) >= {

@@ -10,7 +10,9 @@ from pyspark.sql import functions as F
 from openset_spark.pipeline.dedup import (
     exact_dedup,
     jaccard_pairs,
+    minhash_bands,
     minhash_candidates,
+    minhash_signature,
     simhash_candidates,
 )
 from openset_spark.pipeline.multimodal import extract_features, frame_sample_plan
@@ -45,6 +47,44 @@ def test_minhash_recall_vs_exact_jaccard(spark):
     recall = len(truth & cands) / len(truth)
     # 16 bands x 4 rows: P(candidate | j=0.7) = 1-(1-0.7^4)^16 ~ 0.99
     assert recall >= 0.9, f"minhash recall {recall} over {len(truth)} pairs"
+
+
+def test_minhash_signature_equals_verbatim_slot_aggregate(spark):
+    """Bit-equality fence: minhash_signature must equal the verbatim
+    JVM ``min(xxhash64(_h, i))`` aggregate over the exploded shingle
+    hashes. Any slot drift changes every minhash candidate set, and
+    with it every minhash-derived query result."""
+    import random
+
+    from openset_spark.functions.text import shingles_from_tokens, tokens
+
+    rng = random.Random(3)
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta"]
+    docs = [
+        (i, " ".join(rng.choice(words) for _ in range(rng.randint(1, 30))))
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    exploded = (
+        df.select("doc_id", tokens(F.col("text")).alias("_toks"))
+        .select(
+            "doc_id",
+            F.explode(
+                F.array_distinct(shingles_from_tokens(F.col("_toks"), 3))
+            ).alias("shingle"),
+        )
+        .select("doc_id", F.xxhash64("shingle").alias("_h"))
+    )
+    slots = ",".join(f"min(xxhash64(_h, {i}))" for i in range(64))
+    exp = {
+        r.doc_id: r.mh
+        for r in exploded.groupBy("doc_id")
+        .agg(F.expr(f"array({slots})").alias("mh"))
+        .collect()
+    }
+    got = {r.doc_id: r.mh for r in minhash_signature(df).collect()}
+    assert got == exp
+    assert minhash_bands(df).count() == 16 * len(got)
 
 
 def test_simhash_identical_and_disjoint(spark):

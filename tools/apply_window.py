@@ -1,68 +1,70 @@
 #!/usr/bin/env python
-"""Apply the rotation tools/plan_window.py computed: rewrite
-__spark_entry__.py so `_priority_queries()` returns exactly the
-planned window (in order) and `_extra_queries()` holds everything
-else — spilled forced keys first (they head the NEXT round's window),
-then resting greens, then never-green newborns.
+"""Apply the rotation tools/plan_window.py computed: reorder the rows
+of ``REGISTRY`` in __spark_entry__.py so the first ``_DRIVER_WINDOW``
+rows are exactly the planned window (in order), followed by the
+spilled forced keys (they head the NEXT round's window), then every
+other row in its current order.
 
 Usage:
   python tools/apply_window.py            # dry run: print the plan
   python tools/apply_window.py --write    # rewrite __spark_entry__.py
 
-The rewrite only reorders dict literals of the form `"key": q_func,`
-between the two `return {` ... `}` blocks; every (key -> function)
-pair is preserved exactly, and the tool verifies the reimported
-module exposes the same 1:1 registry before declaring success.
-Update the human comment above _priority_queries() by hand — it
-describes WHY this window, which no tool knows.
+The rewrite only moves whole rows inside the one ``REGISTRY = (``
+... ``)`` block; each row's text is kept byte for byte, and the tool
+verifies that the reimported module exposes the same key -> (builder,
+oracle SQL, family) table before declaring success.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, __import__("os").path.dirname(
-    __import__("os").path.dirname(__import__("os").path.abspath(__file__))
-))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from plan_window import compute_window, load_ledger  # noqa: E402 (tools dir)
+from plan_window import compute_window, load_ledger  # noqa: E402
+
+_BLOCK = re.compile(r"^REGISTRY: tuple\[Query, \.\.\.\] = \(\n(.*?)^\)\n", re.S | re.M)
+_MARKER = "    # ---- end of the driver window (first _DRIVER_WINDOW rows) ----\n"
+
+
+def split_rows(body: str) -> dict[str, str]:
+    """Row text by key, in table order. A row starts at a line
+    ``    Query("<key>", ...`` and runs to the next row; comment lines
+    between rows are dropped (the window marker is rewritten)."""
+    rows: dict[str, str] = {}
+    key = None
+    for line in body.splitlines(keepends=True):
+        m = re.match(r'    Query\("([a-z0-9_]+)"', line)
+        if m:
+            key = m.group(1)
+            rows[key] = line
+        elif line.startswith("    #"):
+            continue
+        else:
+            rows[key] += line
+    return rows
 
 
 def main() -> None:
     write = "--write" in sys.argv
-    path = "__spark_entry__.py"
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "__spark_entry__.py",
+    )
     src = open(path).read()
-
-    def dict_block(name: str):
-        m = re.search(
-            rf"def {name}\(\).*?return \{{\n(.*?)\n    \}}\n", src, re.S
-        )
-        if not m:
-            raise SystemExit(f"cannot locate {name}() dict literal")
-        return m.group(1), m.span(1)
-
-    pb, pspan = dict_block("_priority_queries")
-    eb, espan = dict_block("_extra_queries")
-    if espan[0] <= pspan[1]:
-        # the splice below replaces the LATER span first so the
-        # earlier span's offsets stay valid — that only holds while
-        # _priority_queries() precedes _extra_queries() in the file
-        raise SystemExit(
-            "_extra_queries() must come after _priority_queries() in "
-            f"{path} (span order changed — refusing to splice)"
-        )
-    pairs: dict[str, str] = {}
-    for body in (pb, eb):
-        for m in re.finditer(r'"([a-z0-9_]+)": (q_[a-z0-9_]+),', body):
-            pairs[m.group(1)] = m.group(2)
+    m = _BLOCK.search(src)
+    if not m:
+        raise SystemExit(f"cannot locate the REGISTRY table in {path}")
+    rows = split_rows(m.group(1))
 
     keys_all, last_green, cur = load_ledger()
     window, spill, _never = compute_window(keys_all, last_green, cur + 1)
-    missing = [k for k in window if k not in pairs]
+    missing = [k for k in window if k not in rows]
     if missing:
         raise SystemExit(f"planned keys missing from registry: {missing}")
-    rest = [k for k in pairs if k not in window and k not in spill]
+    rest = [k for k in rows if k not in window and k not in spill]
 
     print(f"# window ({len(window)}), spill ({len(spill)}), "
           f"rest ({len(rest)})")
@@ -73,31 +75,21 @@ def main() -> None:
         print("# dry run — pass --write to rewrite __spark_entry__.py")
         return
 
-    def lines(keys):
-        return "\n".join(f'        "{k}": {pairs[k]},' for k in keys)
-
-    new_e = lines(spill)
-    if spill:
-        new_e = (
-            "        # forced spill — heads the NEXT round's window "
-            "(tools/plan_window.py)\n" + new_e + "\n"
-        )
-    new_e += "        # resting greens\n" + lines(rest)
-    src = src[: espan[0]] + new_e + src[espan[1]:]
-    src = src[: pspan[0]] + lines(window) + src[pspan[1]:]
-    open(path, "w").write(src)
-
-    # verify: same 1:1 registry, window applied
-    import importlib
-
     import __spark_entry__ as entry
 
+    before = {q.name: (q.builder.__name__, q.sql, q.family) for q in entry.REGISTRY}
+    body = "".join(rows[k] for k in window) + _MARKER
+    body += "".join(rows[k] for k in spill + rest)
+    open(path, "w").write(src[: m.start(1)] + body + src[m.end(1):])
+
+    # verify: same key -> row table, window applied
+    import importlib
+
     importlib.reload(entry)
-    got = entry.queries()
-    assert list(got)[: len(window)] == window, "window order not applied"
-    assert set(got) == set(pairs), "registry key set changed"
-    print(f"rewrote {path}: {len(got)} keys, window applied; "
-          "now update the _priority_queries() comment by hand")
+    after = {q.name: (q.builder.__name__, q.sql, q.family) for q in entry.REGISTRY}
+    assert list(after)[: len(window)] == window, "window order not applied"
+    assert after == before, "registry rows changed"
+    print(f"rewrote {path}: {len(after)} keys, window applied")
 
 
 if __name__ == "__main__":

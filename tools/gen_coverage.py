@@ -34,8 +34,9 @@ def main() -> None:
             rounds[int(m.group(1))] = json.load(open(path))
     rids = sorted(rounds)
 
-    prio = list(entry._priority_queries().keys())
-    extras = list(entry._extra_queries().keys())
+    keys = list(entry.queries())
+    prio = keys[: entry._DRIVER_WINDOW]
+    extras = keys[entry._DRIVER_WINDOW :]
 
     def cell(key: str, r: int) -> str:
         row = rounds[r].get(key)

@@ -13,8 +13,9 @@ Usage:
   §1.4) — use it to see compute the count() path lets Spark prune.
 - ``--plans DIR --tag T`` writes DIR/<query>_T.txt with
   explain('formatted') output for each query.
-- Bench-only impls (dedup_minhash production path etc.) are included
-  via bench._bench_impls, same as bench.py.
+- ``--queries headline`` times bench.py's headline entries (their
+  production builders for dedup_minhash / ann_lsh / ann_ivf); named
+  keys time the registry builders from ``queries()``.
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
 import bench  # noqa: E402
 from openset_spark import get_spark  # noqa: E402
+from openset_spark.sources.tables import load_table  # noqa: E402
 
 
 def main() -> None:
@@ -41,31 +43,25 @@ def main() -> None:
     ap.add_argument("--plans", default=None)
     ap.add_argument("--tag", default="before")
     ap.add_argument("--sink", choices=["count", "noop"], default="count")
-    ap.add_argument("--registry-only", action="store_true",
-                    help="do NOT overlay bench._bench_impls() — bench "
-                         "defines same-named impls (ann_pq, dedup_minhash, "
-                         "...) that SHADOW the registry query; measuring "
-                         "'the registry path' through the merged dict "
-                         "silently times the bench path instead")
     ap.add_argument("--json-out", default=None)
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("openset-spark-measure-r15")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = (entry_mod.queries() if args.registry_only
-          else {**entry_mod.queries(), **bench._bench_impls()})
+    if args.queries == "headline":
+        qs = {name: builder for name, builder, *_ in bench.SECTIONS["queries"]}
+    else:
+        registry = entry_mod.queries()
+        qs = {n.strip(): registry[n.strip()]
+              for n in args.queries.split(",") if n.strip()}
 
-    names = (bench.HEADLINE if args.queries == "headline"
-             else [n.strip() for n in args.queries.split(",") if n.strip()])
-
-    from openset_spark.sources.tables import load_table
     for t in ("lineitem", "orders", "customer", "events", "documents",
               "embeddings"):
         load_table(spark, sf_dir, t).count()
 
     out: dict[str, float] = {}
-    for name in names:
+    for name in qs:
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             df = qs[name](spark, sf_dir)

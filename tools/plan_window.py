@@ -8,8 +8,8 @@ silently.
 
 Usage: python tools/plan_window.py [next_round_number]
 Prints the proposed 50-key window in order plus the spill list if
-the forced set overflows. Purely advisory — apply by reordering
-_priority_queries() in __spark_entry__.py next round.
+the forced set overflows. Purely advisory — tools/apply_window.py
+applies it by reordering the rows of __spark_entry__.REGISTRY.
 
 `load_ledger()` is importable (tests/test_registry.py uses it to
 assert the family-freshness invariant across rotations).
@@ -25,83 +25,24 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-WINDOW = 50
+import __spark_entry__ as entry  # noqa: E402
 
-# Operator families (SURVEY §2 + the pipeline table) -> the keys that
-# can represent them. The rotation must keep every family driver-FRESH:
-# >= 1 rep in the next window OR driver-green within the last 2
-# completed rounds. Shared with tests/test_registry.py (it imports
-# this map) so the planner and the invariant can never disagree —
-# added in r14 after the r14 overflow spilled `contamination_check`,
-# the sole `decontam` rep, past its freshness horizon.
-WINDOW_FAMILIES = {
-    "relational": [
-        "tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6", "tpch_q7_style",
-        "tpch_q9_style", "tpch_q10_style", "tpch_q18_style", "top_customers",
-    ],
-    "event_agg": [
-        "event_agg_by_type", "event_agg_rollup", "event_agg_by_day",
-        "event_agg_two_level", "event_agg_distinct_stamps",
-        "user_purchase_totals", "recent_purchase_totals",
-    ],
-    "event_rows": [
-        "first_events_per_user", "last_purchase_per_user",
-        "zorder_first_rows", "row_count_distribution",
-    ],
-    "dim_join": ["events_with_user_dim", "customer_timeline"],
-    "sessionize": ["session_counts", "session_counts_5min", "session_stats"],
-    "funnel": [
-        "funnel_within_hour", "funnel_signup_purchase", "days_to_convert",
-    ],
-    "paths": [
-        "next_event_transitions", "next_session_transitions", "top_paths",
-    ],
-    "retention": ["weekly_retention", "monthly_retention"],
-    "segments": [
-        "segment_counts", "segment_algebra", "segment_sequence_counts",
-        "textual_user_core",
-    ],
-    "osl_declarative": [
-        "osl_event_agg", "osl_funnel_continue", "osl_segment_counts",
-        "osl_histogram_weeks", "osl_agg_options",
-    ],
-    "osl_imperative": [
-        "osl_script_counter", "osl_customer_write", "osl_return_first",
-    ],
-    "property_counts": [
-        "property_counts", "property_counts_rx", "property_counts_bucketed",
-        "property_counts_between", "property_counts_by_segment",
-    ],
-    "histogram": [
-        "histogram_spend_clipped", "histogram_by_type",
-        "histogram_weeks_since", "session_length_quantiles",
-        "purchases_by_quarter",
-    ],
-    "props_sets": ["props_json_extract", "user_event_type_sets"],
-    "dedup_exact": ["dedup_exact", "dedup_exact_keep"],
-    "dedup_sketch": [
-        "dedup_minhash", "dedup_simhash", "dedup_ngram_jaccard",
-        "dedup_embedding", "substring_dup_pairs", "containment_pairs",
-    ],
-    "ann": ["ann_topk", "ann_lsh", "ann_ivf", "embedding_centroids"],
-    "text": [
-        "text_stats", "quality_score", "lang_id", "doc_fingerprint",
-        "token_counts", "clean_documents", "top_bigrams",
-        "repetition_signals", "char_entropy", "readability",
-        "vocab_growth",
-    ],
-    "decontam": ["contamination_check"],
-    "sampling": ["token_budget_select", "sample_per_stratum"],
-    "retention_maintenance": ["retention_cull", "retention_cap"],
-}
+WINDOW = entry._DRIVER_WINDOW
+
+# Operator family -> the registry keys that can represent it (the
+# `family` field of each REGISTRY row). The rotation must keep every
+# family driver-FRESH: >= 1 rep in the next window OR driver-green
+# within the last 2 completed rounds (tests/test_registry.py).
+WINDOW_FAMILIES: dict[str, list[str]] = {}
+for _q in entry.REGISTRY:
+    if _q.family:
+        WINDOW_FAMILIES.setdefault(_q.family, []).append(_q.name)
 
 
 def load_ledger() -> tuple[list[str], dict[str, int], int]:
     """Return (registry keys, key -> last driver-green round, latest
     round number seen in CORRECTNESS_r*.json)."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    import __spark_entry__ as entry
-
     keys = list(entry.queries().keys())
     last_green: dict[str, int] = {}
     rounds = []
