@@ -528,9 +528,10 @@ def main() -> None:
     spark = get_spark("openset-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm the JVM + parquet footers of every table the suite touches
-    # with trivial actions (each query still pays its own planning and
-    # codegen — this only removes first-touch file-listing noise)
+    # warm the JVM, the parquet reader and the OS file cache of every
+    # table the suite touches with trivial actions (each query still
+    # pays its own footer read, planning and codegen — this only
+    # removes first-touch noise)
     for t in ("lineitem", "orders", "customer", "events", "documents",
               "embeddings"):
         load_table(spark, sf_dir, t).count()

@@ -12,6 +12,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of the host's memory, at
+    most 24g: a fixed 24g heap on a smaller host lets the JVM grow past
+    what the host has, and the OS kills it mid-run."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, host_mb // 2)}m"
+
+
 def get_spark(app_name: str = "openset-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -25,7 +36,7 @@ def get_spark(app_name: str = "openset-spark", *, shuffle_partitions: int | None
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Align whole-stage codegen's bail-out with HotSpot's actual

@@ -1,11 +1,19 @@
 """Parquet table loaders.
 
 The testdata layout is one parquet file per table under an sf dir
-(see TESTDATA.md). At cluster scale the same loader points at a
-partitioned parquet/iceberg location; we deliberately go through
-``spark.read.parquet`` so partition pruning, predicate pushdown and
-column pruning all apply (verify with ``df.explain``: PushedFilters /
-ReadSchema).
+(see TESTDATA.md); a table may also be a directory of part files. We
+go through ``spark.read.parquet`` so partition pruning, predicate
+pushdown and column pruning all apply (verify with ``df.explain``:
+PushedFilters / ReadSchema).
+
+``load_table`` hands Spark the read schema instead of letting it infer
+one: it reads the one footer Spark's non-merging inference would read
+(the file, or a directory's first data file in sorted order) on the
+driver with pyarrow, which starts no Spark job, and passes the mapped
+schema to ``spark.read.schema``. A schema taken from the file's own
+footer cannot drift from that file, unlike a hand-written one (a
+declared ``bigint`` over TIMESTAMP(MICROS) silently returns raw
+microseconds; a declared column the file lacks comes back as nulls).
 """
 
 from __future__ import annotations
@@ -14,9 +22,12 @@ import os
 import re
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import LongType, StructField, StructType
 
 TABLE_NAMES = (
     "region",
@@ -35,29 +46,63 @@ TABLE_NAMES = (
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 
-# Columns stored as parquet TIMESTAMP(NANOS), which Spark cannot read
-# natively: we read them as raw nanosecond longs and convert with exact
-# integer division (a double `/ 1000` would lose microseconds at 1e18).
-_NANO_TS_COLS = {"events": ("ts",)}
+def _data_file(path: str) -> str:
+    """The file whose footer Spark's non-merging schema inference reads:
+    the path itself, or a directory's first data file in sorted order
+    (``_`` and ``.`` names are metadata, markers or hidden files)."""
+    if not os.path.isdir(path):
+        return path
+    for name in sorted(os.listdir(path)):
+        full = os.path.join(path, name)
+        if name[0] not in "_." and os.path.isfile(full):
+            return full
+    raise FileNotFoundError(f"no parquet data file in {path}")
+
+
+def _footer_schema(path: str) -> tuple[StructType, list[str]]:
+    """Spark read schema of a parquet table from its footer, and the
+    names of its TIMESTAMP(NANOS) columns.
+
+    Spark cannot read TIMESTAMP(NANOS) as a timestamp, so such a column
+    is read as its raw nanosecond long (``load_table`` converts it).
+    Every other timestamp, tz-less ones included, is read as
+    TIMESTAMP_LTZ: Spark 4 would infer TIMESTAMP_NTZ for tz-less
+    parquet, which unix_micros/unix_millis reject, so no operator
+    downstream ever sees NTZ. INT96 (legacy Spark/Impala timestamps) is
+    coerced to microseconds here, or pyarrow would report it as
+    nanoseconds; Spark reads it natively.
+    """
+    with pq.ParquetFile(_data_file(path), coerce_int96_timestamp_unit="us") as pf:
+        arrow = pf.schema_arrow
+    nanos = [f.name for f in arrow if pa.types.is_timestamp(f.type) and f.type.unit == "ns"]
+    schema = StructType(
+        [
+            StructField(f.name, LongType() if f.name in nanos else from_arrow_type(f.type))
+            for f in arrow
+        ]
+    )
+    return schema, nanos
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # The engine's time semantics are naive-wall-clock == UTC (matching
     # DuckDB's epoch_us on tz-less parquet). Pin the session timezone so
-    # NTZ→LTZ casts are deterministic regardless of the caller's session.
+    # time arithmetic downstream is deterministic regardless of the
+    # caller's session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for col in _NANO_TS_COLS.get(name, ()):
-        if isinstance(df.schema[col].dataType, LongType):
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    # Spark 4 reads tz-less parquet timestamp[us] as TIMESTAMP_NTZ, which
-    # unix_micros/unix_millis reject; normalize every NTZ column to LTZ
-    # here so no operator downstream ever sees NTZ.
-    for field in df.schema.fields:
-        if isinstance(field.dataType, TimestampNTZType):
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp_ltz"))
-    return df
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema, nanos = _footer_schema(path)
+    df = spark.read.schema(schema).parquet(path)
+    if not nanos:
+        return df
+    # exact integer division: a double `/ 1000` would lose microseconds
+    # at 1e18
+    return df.select(
+        *(
+            F.timestamp_micros(F.expr(f"`{c}` div 1000")).alias(c) if c in nanos else F.col(f"`{c}`")
+            for c in df.columns
+        )
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

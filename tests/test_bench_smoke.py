@@ -61,6 +61,11 @@ def test_bench_script_emits_contract_json():
     assert [k for k in full if k not in header] == [
         s for s in bench.SECTIONS if s not in {"skew", "ann_scale", "scaling"}
     ]
+    # a failed section records {"error": ...} and the script still
+    # exits 0: a JVM that died mid-run (ConnectionRefusedError in every
+    # later section) must fail here, not pass as a complete record
+    errors = {k: v["error"] for k, v in full.items() if isinstance(v, dict) and "error" in v}
+    assert errors == {}, errors
     out = full  # aux sections live on the full record
     # the r6/r7 sections ride along even in smoke mode
     assert set(out.get("pipeline_r6", {})) >= {

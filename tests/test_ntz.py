@@ -5,8 +5,9 @@ inference is on by default), and ``unix_micros``/``unix_millis`` reject
 NTZ input — this killed every time-arithmetic operator in round 3.
 Two defenses, both exercised here:
 
-1. ``load_table`` normalizes every NTZ column to TIMESTAMP_LTZ under an
-   explicitly-UTC session, so nothing downstream ever sees NTZ.
+1. ``load_table`` declares every timestamp column TIMESTAMP_LTZ in the
+   read schema it takes from the parquet footer, and pins the session
+   to UTC, so nothing downstream ever sees NTZ.
 2. ``epoch_us``/``epoch_ms`` cast to ``timestamp_ltz`` first, so
    operators fed a raw NTZ frame (not via the loader) still work.
 """
