@@ -279,15 +279,6 @@ def _ann_scale(spark):
     return run_scale_bench(spark, reps=2)
 
 
-def _pipeline_media(spark):
-    # decode_images / image_hashes / audio_feature_rows over cached
-    # generated payloads at a fixed byte budget: MB/s through the Arrow
-    # mapInPandas tier
-    from openset_spark.pipeline.media_bench import run_media_bench
-
-    return run_media_bench(spark)
-
-
 def _scaling(spark):
     # a generated multi-file input whose scan/shuffle stages fan out —
     # the core-scaling signal the single-row-group sf0.1 headline
@@ -464,7 +455,6 @@ SECTIONS = {
     # heap/GC pressure to distort these sub-second timings
     "skew": _skew,
     "ann_scale": _ann_scale,
-    "pipeline_media": _pipeline_media,
     "scaling": _scaling,
 }
 

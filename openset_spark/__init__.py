@@ -4,7 +4,7 @@ A from-scratch re-expression of the capabilities of opset/openset
 (customer event analytics: segments, funnels, sessions, property
 counts, histograms) as declarative Spark DataFrame plans, plus the
 large-scale training-data pipeline operators (dedup, similarity
-search, text analysis, multimodal plumbing).
+search, text analysis).
 
 Design: every operator is a pure function DataFrame -> DataFrame built
 from `pyspark.sql.functions` so Catalyst sees the whole plan (filter

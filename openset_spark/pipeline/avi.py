@@ -5,8 +5,7 @@ JPEG, decoded by pipeline/jpeg.py) and uncompressed bottom-up DIB.
 This closes the "video frame decode" gap for the one family that
 needs no native codec: MJPEG remains common in surveillance /
 capture-card corpora, and DIB covers raw-dump AVIs. Anything else
-(H.264/VP9/AV1) stays the documented ffmpeg stub in
-pipeline/multimodal.py — route on `probe_videos` metadata first.
+(VP9/AV1) is not decoded; H.264 streams go to pipeline/h264.py.
 
 MJPEG quirk handled for real: many MJPEG writers OMIT the Huffman
 tables from every frame (historical Microsoft reading of the spec);
@@ -15,7 +14,7 @@ tables. `_ensure_huffman` splices a DHT segment with the four
 standard tables before the SOS when a frame carries none.
 
 Reference parity: the reference engine has no video path at all —
-this extends the multimodal surface past it (SURVEY §2.8).
+this goes past it (SURVEY §2.8).
 
 Container layout (public AVI RIFF spec):
   RIFF('AVI ') { LIST('hdrl') { avih, LIST('strl'){strh, strf} * },

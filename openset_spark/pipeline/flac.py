@@ -17,9 +17,8 @@ right/side, mid/side). CRCs are parsed but not enforced (the tests
 construct valid streams; a production ingest would verify).
 
 Reference parity: the reference engine ships audio decode behind its
-media ingestion tier; this module plus `decode_audio` /
-`audio_feature_rows` is the Spark-side equivalent for lossless
-audio, with MP3/AAC staying probe+route.
+media ingestion tier; this module is the pure-Python equivalent for
+lossless audio. MP3/AAC are not decoded.
 """
 
 from __future__ import annotations

@@ -24,8 +24,7 @@ interop is asserted structurally, not against external streams.)
 
 Reference behavior parity: the reference engine
 (/root/reference) ships no video decoding at all — this module, like
-the rest of the codec layer, extends the multimodal ingest surface
-beyond reference parity (SURVEY §2.8).
+the rest of the codec layer, goes beyond reference parity (SURVEY §2.8).
 """
 
 from __future__ import annotations

@@ -23,12 +23,10 @@ stages raise ``NotImplementedError`` — vanishingly rare in corpora.
 Decoding is numpy-vectorized where it counts: dequantization + IDCT
 run as one 8x8 matrix sandwich per block batch, and the component
 planes are assembled with array slicing. Only the Huffman bit-walk is
-scalar Python — unavoidable without native code, and the kernel runs
-inside the Arrow ``mapInPandas`` batches of ``decode_images`` so the
-cost is per-executor-core, not per-driver.
+scalar Python — unavoidable without native code.
 
 Entry point: ``decode_jpeg_bytes(data) -> (width, height, channels,
-row-major pixel bytes)`` — the same contract as the PPM/PNG kernels.
+row-major pixel bytes)``.
 """
 
 from __future__ import annotations

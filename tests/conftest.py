@@ -62,9 +62,6 @@ SLOW_TESTS = {
     "test_pq.py::test_pq_lloyd_reduces_distortion",
     "test_r8_ops.py::test_prepare_corpus_split_fractions",
     "test_r8_ops.py::test_dsir_gumbel_resample_reproducible",
-    "test_stream_parity.py::test_stream_image_hashes_match_batch",
-    "test_stream_parity.py::test_stream_frame_diffs_match_batch",
-    "test_stream_parity.py::test_stream_audio_features_match_batch",
     "test_stream_parity.py::test_stream_ngram_coverage_matches_batch",
     "test_sliding_store.py::test_maintained_hdr_and_cms_stores_sum_fold_exactly",
     "test_sliding_store.py::test_maintained_kmv_store_reranks_exactly",

@@ -268,40 +268,3 @@ def test_mjpeg_missing_dht_through_avi():
     np.testing.assert_array_equal(
         np.frombuffer(out[0][2], dtype=np.uint8).reshape(exp.shape), exp
     )
-
-
-# ------------------------------------------------- Spark operators
-def test_probe_videos_and_frame_rows(spark):
-    from openset_spark.pipeline.multimodal import probe_videos, video_frame_rows
-
-    rng = np.random.default_rng(65)
-    w, h = 8, 8
-    comps = [_gray_comp(rng, 1, 1) for _ in range(4)]
-    frames = [(b"dc", encode_baseline_jpeg(w, h, c, [_Q50])) for c in comps]
-    avi = _avi_bytes(frames, w, h, scale=1, rate=4)  # 250 ms/frame
-    media = spark.createDataFrame(
-        [
-            (1, "video", bytearray(avi), "video/x-msvideo", None, None, None),
-            (2, "video", bytearray(b"nope"), "video/mp4", None, None, None),
-        ],
-        "media_id long, kind string, payload binary, mime string, "
-        "width long, height long, duration_ms long",
-    )
-    meta = {r.media_id: r for r in probe_videos(media).collect()}
-    assert meta[1].brand == "AVI " and meta[1].video_codec == "MJPG"
-    assert (meta[1].width, meta[1].height) == (w, h)
-    assert meta[1].duration_ms == 1000
-    assert meta[2].brand is None
-
-    rows = video_frame_rows(media).collect()
-    assert [(r.media_id, r.frame_idx, r.ts_ms) for r in rows] == [
-        (1, 0, 0), (1, 1, 250), (1, 2, 500), (1, 3, 750)
-    ]
-    for r, c in zip(rows, comps):
-        exp = _expected_pixels(w, h, c, [_Q50])
-        np.testing.assert_array_equal(
-            np.frombuffer(r.pixels, dtype=np.uint8).reshape(exp.shape), exp
-        )
-    # sampling: every 400 ms -> latest frame at t=0,400,800 = frames 0,1,3
-    sampled = video_frame_rows(media, every_ms=400).collect()
-    assert [r.frame_idx for r in sampled] == [0, 1, 3]

@@ -320,47 +320,3 @@ def test_rejects_non_flac():
         decode_flac_bytes(b"RIFFxxxxWAVE")
     with pytest.raises(ValueError):
         decode_flac_bytes(b"fLaC")  # truncated: no STREAMINFO
-
-
-def test_flac_routes_through_audio_pipeline(spark):
-    """Integration: a FLAC payload flows through decode_audio AND
-    audio_feature_rows identically to the same samples in a WAV —
-    container-invariant features."""
-    from openset_spark.pipeline.multimodal import (
-        audio_feature_rows,
-        decode_audio,
-    )
-    from tests.test_pipeline import _wav_pcm
-
-    enc = _Enc(rate=8000, bps=16)
-    n = 32
-    left = [1000 if (i // 4) % 2 == 0 else -1000 for i in range(n)]
-    right = [-700] * n
-    side = [l - r for l, r in zip(left, right)]
-
-    def f(w):
-        enc.frame_header(w, n, 8, 0)  # left/side stereo
-        enc.verbatim_sub(w, left, 16)
-        enc.verbatim_sub(w, side, 17)
-
-    flac = enc.stream([enc.frame(f)], 2, n)
-    wav = _wav_pcm(8000, 2, 16, [left, right])
-    media = spark.createDataFrame(
-        [
-            (1, "audio", bytearray(flac), "audio/flac", None, None, None),
-            (2, "audio", bytearray(wav), "audio/wav", None, None, None),
-        ],
-        "media_id long, kind string, payload binary, mime string,"
-        " width long, height long, duration_ms long",
-    )
-    meta = {r.media_id: r for r in decode_audio(media).collect()}
-    assert meta[1].sample_rate == 8000 and meta[1].channels == 2
-    assert meta[1].n_samples == n == meta[2].n_samples
-    feats = audio_feature_rows(media, frame=16).collect()
-    by = {}
-    for r in feats:
-        by.setdefault(r.media_id, set()).add(
-            (r.channel, r.frame_idx, r.n, r.rms, r.zcr, r.peak)
-        )
-    assert by[1] == by[2]  # container-invariant
-    assert len(by[1]) == 4

@@ -211,23 +211,6 @@ def test_gif_frame_count_and_invalid():
         decode_gif_bytes(b"NOTGIF" + b"\x00" * 20)
 
 
-def test_gif_routes_through_decode_images(spark):
-    from openset_spark.pipeline.multimodal import MEDIA_SCHEMA, decode_images
-
-    idx = bytes([1, 0, 3, 2, 1, 1] * 4)
-    data = encode_gif(6, 4, PAL4, idx)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(data), "image/gif", None, None, None)],
-        MEDIA_SCHEMA,
-    )
-    r = decode_images(media, deterministic=False).collect()[0]
-    assert (r.width, r.height, r.channels) == (6, 4, 3)
-    exp = _expected(6, 4, PAL4, idx, 6, 4, 0, 0, None)
-    np.testing.assert_array_equal(
-        np.frombuffer(bytes(r.pixels), dtype=np.uint8).reshape(exp.shape), exp
-    )
-
-
 def test_gif_fuzz_roundtrip():
     try:
         from hypothesis import given, settings, strategies as st
@@ -340,29 +323,3 @@ def test_gif_animation_disposal_and_delays():
     # ...new opaque pixel drawn, transparent one skipped (shows base)
     assert px(frames[2][1], 3, 2) == (0, 0, 250, 255)
     assert px(frames[2][1], 4, 2) == base
-
-
-def test_gif_frame_rows_sampling(spark):
-    from openset_spark.pipeline.multimodal import MEDIA_SCHEMA, gif_frame_rows
-
-    pal = [(9, 9, 9), (99, 99, 99)]
-    frames = [
-        {"indices": bytes([i % 2] * 12), "fw": 4, "fh": 3,
-         "delay_cs": 20, "disposal": 1}
-        for i in range(4)
-    ]  # 200ms per frame, 800ms total
-    data = encode_gif_anim(4, 3, pal, frames)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(data), "image/gif", None, None, None),
-         (2, "image", bytearray(b"P6 1 1 255 abc"), "image/ppm",
-          None, None, None)],
-        MEDIA_SCHEMA,
-    )
-    rows = gif_frame_rows(media).collect()
-    assert [(r.frame_idx, r.ts_ms) for r in rows] == [
-        (0, 0), (1, 200), (2, 400), (3, 600)
-    ]
-    assert all(r.media_id == 1 and r.channels == 4 for r in rows)
-    # sampled every 450ms: frames at t=0 and t=450 -> idx 0 and 2
-    sampled = gif_frame_rows(media, every_ms=450).collect()
-    assert [r.frame_idx for r in sampled] == [0, 2]

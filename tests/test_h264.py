@@ -1359,186 +1359,3 @@ def test_h264_to_rgb_bt601():
     rgb = H.h264_to_rgb(2, 2, y, u, v)
     vals = set(rgb)
     assert all(125 <= b <= 131 for b in vals)
-
-
-def test_video_frame_rows_routes_annexb(spark):
-    """The multimodal Arrow path decodes an Annex-B payload's IDR
-    as frame 0 and skips undecodable payloads silently."""
-    from openset_spark.pipeline.multimodal import video_frame_rows
-
-    rng = np.random.default_rng(11)
-    mb_w, mb_h = 2, 2
-    mbs = [
-        _rand_mb(rng, a % mb_w, a // mb_w, mb_w, allow_pcm=False)
-        for a in range(4)
-    ]
-    data, _ = encode_frame(mb_w, mb_h, mbs)
-    w, h, y, u, v = H.decode_h264_frame(data)
-    expected = H.h264_to_rgb(w, h, y, u, v)
-
-    media = spark.createDataFrame(
-        [
-            (1, "video", bytearray(data)),
-            (2, "video", bytearray(b"\x00\x00\x01garbage")),
-            (3, "video", bytearray(b"not a stream")),
-        ],
-        "media_id long, kind string, payload binary",
-    )
-    rows = video_frame_rows(media).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r.media_id, r.frame_idx, r.width, r.height, r.channels) == (
-        1, 0, 32, 32, 3
-    )
-    assert bytes(r.pixels) == expected
-
-
-# ------------------------------------------------------------------
-# MP4 container extraction (in-test muxer -> extractor -> decoder)
-# ------------------------------------------------------------------
-def _box(fourcc: bytes, payload: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">I", len(payload) + 8) + fourcc + payload
-
-
-def _mux_mp4(sps_nal: bytes, pps_nal: bytes, samples: list[bytes],
-             sync_sample: int = 1, length_size: int = 4,
-             w: int = 32, h: int = 32) -> bytes:
-    """Minimal but structurally honest MP4: ftyp + mdat + moov with
-    real stsd/avcC, stts, stsc, stsz, stco and stss tables.
-    ``samples`` are raw slice NALs (no start codes); each becomes one
-    sample (one chunk each, except the last two share a chunk when
-    there are >= 2 samples — exercising the stsc run walk)."""
-    import struct
-
-    framed = []
-    for s in samples:
-        framed.append(len(s).to_bytes(length_size, "big") + s)
-
-    # chunk layout: one sample per chunk, but the final TWO samples
-    # share the last chunk when possible
-    if len(framed) >= 3:
-        chunks = [[f] for f in framed[:-2]] + [framed[-2:]]
-        stsc_runs = [(1, 1), (len(chunks), 2)]
-    else:
-        chunks = [[f] for f in framed]
-        stsc_runs = [(1, 1)]
-
-    ftyp = _box(b"ftyp", b"isom\x00\x00\x02\x00isomavc1")
-    mdat_payload = b"".join(b"".join(c) for c in chunks)
-    mdat_off = len(ftyp) + 8
-    mdat = _box(b"mdat", mdat_payload)
-
-    offsets = []
-    pos = mdat_off
-    for c in chunks:
-        offsets.append(pos)
-        pos += sum(len(f) for f in c)
-
-    avcc = _box(
-        b"avcC",
-        bytes([1, sps_nal[1], sps_nal[2], sps_nal[3],
-               0xFC | (length_size - 1), 0xE1])
-        + struct.pack(">H", len(sps_nal)) + sps_nal
-        + bytes([1]) + struct.pack(">H", len(pps_nal)) + pps_nal,
-    )
-    avc1 = _box(
-        b"avc1",
-        b"\x00" * 6 + struct.pack(">H", 1) + b"\x00" * 16
-        + struct.pack(">HH", w, h) + b"\x00" * 50
-        + avcc,
-    )
-    stsd = _box(b"stsd", struct.pack(">II", 0, 1) + avc1)
-    stts = _box(b"stts", struct.pack(">IIII", 0, 1, len(framed), 1000))
-    stsc = _box(
-        b"stsc",
-        struct.pack(">II", 0, len(stsc_runs))
-        + b"".join(struct.pack(">III", fc, pc, 1) for fc, pc in stsc_runs),
-    )
-    stsz = _box(
-        b"stsz",
-        struct.pack(">III", 0, 0, len(framed))
-        + b"".join(struct.pack(">I", len(f)) for f in framed),
-    )
-    stco = _box(
-        b"stco",
-        struct.pack(">II", 0, len(offsets))
-        + b"".join(struct.pack(">I", o) for o in offsets),
-    )
-    stss = _box(b"stss", struct.pack(">III", 0, 1, sync_sample))
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco + stss)
-    minf = _box(b"minf", stbl)
-    hdlr = _box(b"hdlr", b"\x00" * 8 + b"vide" + b"\x00" * 13)
-    mdia = _box(b"mdia", hdlr + minf)
-    tkhd = _box(
-        b"tkhd",
-        b"\x00" * 76 + struct.pack(">II", w << 16, h << 16),
-    )
-    trak = _box(b"trak", tkhd + mdia)
-    mvhd = _box(
-        b"mvhd",
-        b"\x00" * 12 + struct.pack(">II", 1000, 1000 * len(framed))
-        + b"\x00" * 80,
-    )
-    moov = _box(b"moov", mvhd + trak)
-    return ftyp + mdat + moov
-
-
-def _nals_of(stream: bytes):
-    return H.split_nals(stream)
-
-
-def test_mp4_keyframe_extraction_roundtrip():
-    from openset_spark.pipeline.multimodal import extract_mp4_h264_keyframe
-
-    rng = np.random.default_rng(21)
-    mb_w, mb_h = 2, 2
-    mbs = [
-        _rand_mb(rng, a % mb_w, a // mb_w, mb_w, allow_pcm=False)
-        for a in range(4)
-    ]
-    data, _ = encode_frame(mb_w, mb_h, mbs)
-    sps, pps, idr = _nals_of(data)
-    # decoy non-sync samples (arbitrary NAL payloads) before the IDR,
-    # with the sync sample LAST (shared final chunk exercises stsc)
-    decoy = bytes([0x61]) + b"\x00" * 40
-    mp4 = _mux_mp4(sps, pps, [decoy, decoy, decoy, idr], sync_sample=4)
-    annexb = extract_mp4_h264_keyframe(mp4)
-    w, h, y, u, v = H.decode_h264_frame(annexb)
-    ew, eh, ey, eu, ev = H.decode_h264_frame(data)
-    assert (w, h) == (ew, eh)
-    assert y == ey and u == eu and v == ev
-
-
-def test_mp4_length_size_variants():
-    from openset_spark.pipeline.multimodal import extract_mp4_h264_keyframe
-
-    rng = np.random.default_rng(22)
-    mbs = [_rand_mb(rng, 0, 0, 1, allow_pcm=False)]
-    data, _ = encode_frame(1, 1, mbs)
-    sps, pps, idr = _nals_of(data)
-    for ls in (1, 2, 4):
-        mp4 = _mux_mp4(sps, pps, [idr], length_size=ls, w=16, h=16)
-        annexb = extract_mp4_h264_keyframe(mp4)
-        got = H.decode_h264_frame(annexb)
-        assert got == H.decode_h264_frame(data)
-
-
-def test_video_frame_rows_routes_mp4(spark):
-    from openset_spark.pipeline.multimodal import video_frame_rows
-
-    rng = np.random.default_rng(23)
-    mbs = [_rand_mb(rng, 0, 0, 1, allow_pcm=False)]
-    data, _ = encode_frame(1, 1, mbs)
-    sps, pps, idr = _nals_of(data)
-    mp4 = _mux_mp4(sps, pps, [idr], w=16, h=16)
-    w, h, y, u, v = H.decode_h264_frame(data)
-    expected = H.h264_to_rgb(w, h, y, u, v)
-    media = spark.createDataFrame(
-        [(9, "video", bytearray(mp4))],
-        "media_id long, kind string, payload binary",
-    )
-    rows = video_frame_rows(media).collect()
-    assert len(rows) == 1
-    assert bytes(rows[0].pixels) == expected

@@ -792,22 +792,6 @@ def test_cabac_init_tables_structurally_valid():
     assert C.TRANS_MPS[62] == 62 and C.TRANS_MPS[63] == 63
 
 
-def test_cabac_stream_routed_in_video_frame_rows(spark):
-    """A CABAC Annex-B payload flows through the same multimodal
-    ingest operator as CAVLC streams."""
-    from openset_spark.pipeline.multimodal import video_frame_rows
-
-    rng = np.random.default_rng(3)
-    mbs = [_rand_mb(rng, 0, 0, 1, allow_pcm=False)]
-    data = encode_frame_cabac(1, 1, mbs, 26)
-    df = spark.createDataFrame(
-        [(1, bytearray(data))], "media_id long, payload binary"
-    )
-    rows = video_frame_rows(df).collect()
-    assert len(rows) == 1
-    assert rows[0].width == 16 and rows[0].height == 16
-
-
 def _cabac_i8_roundtrip(mb_w, mb_h, mbs, qp=26, chroma_offset=0,
                         slice_starts=(0,), deblock=(1, 0, 0)):
     data = encode_frame_cabac(mb_w, mb_h, mbs, qp, chroma_offset,

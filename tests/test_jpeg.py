@@ -604,29 +604,6 @@ def test_unsupported_frames_rejected():
         decode_jpeg_bytes(b"nope")
 
 
-def test_decode_images_routes_jpeg(spark):
-    """The Arrow mapInPandas path dispatches JPEG payloads to the real
-    kernel — same contract as the PPM/PNG kernels."""
-    from openset_spark.pipeline.multimodal import MEDIA_SCHEMA, decode_images
-
-    rng = np.random.default_rng(37)
-    comps = [{"h": 1, "v": 1, "tq": 0, "blocks": _rand_blocks(rng, 2, 1)}]
-    data = encode_baseline_jpeg(16, 8, comps, [QTABLE])
-    exp = _expected_pixels(16, 8, comps, [QTABLE])
-
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(data), "image/jpeg", None, None, None)],
-        MEDIA_SCHEMA,
-    )
-    rows = decode_images(media, deterministic=False).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r.width, r.height, r.channels) == (16, 8, 1)
-    np.testing.assert_array_equal(
-        np.frombuffer(bytes(r.pixels), dtype=np.uint8).reshape(exp.shape), exp
-    )
-
-
 def test_fuzz_roundtrip_random_configs():
     """Property fuzz across geometry, sampling, restart interval and
     coefficient density: decode(encode(blocks)) must equal the

@@ -1,10 +1,9 @@
 """Pipeline operator verification: LSH recall vs exact baselines,
-simhash properties, multimodal plumbing."""
+simhash properties."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from openset_spark.pipeline.dedup import (
@@ -15,7 +14,6 @@ from openset_spark.pipeline.dedup import (
     minhash_signature,
     simhash_candidates,
 )
-from openset_spark.pipeline.multimodal import extract_features, frame_sample_plan
 from openset_spark.pipeline.similarity import brute_force_topk, lsh_topk
 from openset_spark.sources.tables import load_table
 
@@ -125,51 +123,6 @@ def test_ann_lsh_recall_vs_brute_force(spark):
     assert sum(recalls) / len(recalls) >= 0.2, recalls
 
 
-def test_multimodal_feature_plumbing(spark):
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(b"\x01\x02\x03\x04"), "image/png", 2, 2, None),
-            (2, "video", bytearray(b"\x05\x06"), "video/mp4", 4, 4, 3500),
-        ],
-        "media_id long, kind string, payload binary, mime string, width long, height long, duration_ms long",
-    )
-    feats = extract_features(media, dim=4).collect()
-    by_id = {r.media_id: r for r in feats}
-    assert by_id[1].n_bytes == 4 and len(by_id[1].feature) == 4
-    # deterministic: same payload -> same feature
-    feats2 = extract_features(media, dim=4).collect()
-    assert {r.media_id: r.feature for r in feats2} == {
-        r.media_id: r.feature for r in feats
-    }
-    frames = frame_sample_plan(media, every_ms=1000).collect()
-    assert [r.frame_ts_ms for r in frames] == [0, 1000, 2000, 3000]
-
-
-def test_multimodal_decode_resize_plumbing(spark):
-    from openset_spark.pipeline.multimodal import decode_images, resize_images
-
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(b"\x10\x20\x30"), "image/png", 4, 2, None),
-            (2, "video", bytearray(b"\x05"), "video/mp4", 4, 4, 1000),
-        ],
-        "media_id long, kind string, payload binary, mime string, width long, height long, duration_ms long",
-    )
-    dec = decode_images(media)
-    rows = dec.collect()
-    assert [r.media_id for r in rows] == [1]  # videos filtered out
-    r = rows[0]
-    assert (r.width, r.height, r.channels) == (4, 2, 3)
-    assert len(r.pixels) == 4 * 2 * 3
-
-    small = resize_images(dec, 2, 1).collect()[0]
-    assert (small.width, small.height) == (2, 1)
-    assert len(small.pixels) == 2 * 1 * 3
-    # resize is deterministic and pulls real source pixels
-    again = resize_images(dec, 2, 1).collect()[0]
-    assert small.pixels == again.pixels
-
-
 def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
     from openset_spark.pipeline.similarity import brute_force_topk, ivf_topk
     from openset_spark.sources.tables import load_table
@@ -229,78 +182,6 @@ def test_stratified_and_weighted_sampling(spark):
     # deterministic: same seed -> identical sample
     again = weighted_sample(w, "wt", ["id"], seed=7)
     assert kept.exceptAll(again).count() == 0 and again.exceptAll(kept).count() == 0
-
-
-def _ppm_bytes(w, h):
-    # P6 with a comment line; pixel (x, y) = (x, y, x+y) — distinct values
-    header = f"P6\n# test image\n{w} {h}\n255\n".encode()
-    px = bytearray()
-    for y in range(h):
-        for x in range(w):
-            px += bytes((x * 16 % 256, y * 16 % 256, (x + y) % 256))
-    return header + bytes(px)
-
-
-def _wav_bytes(rate, n_ch, bits, n_samples):
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(n_ch)
-        wf.setsampwidth(bits // 8)
-        wf.setframerate(rate)
-        wf.writeframes(b"\x00" * (n_samples * n_ch * (bits // 8)))
-    return buf.getvalue()
-
-
-def test_real_ppm_decode_roundtrip(spark):
-    from openset_spark.pipeline.multimodal import decode_images, resize_images
-
-    payload = _ppm_bytes(6, 4)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(payload), "image/x-portable-pixmap", None, None, None)],
-        "media_id long, kind string, payload binary, mime string,"
-        " width long, height long, duration_ms long",
-    )
-    # deterministic=False: PPM decodes for REAL (no stub fallback)
-    rows = decode_images(media, deterministic=False).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r.width, r.height, r.channels) == (6, 4, 3)
-    px = bytes(r.pixels)
-    assert len(px) == 6 * 4 * 3
-    # pixel (x=2, y=3) round-trips exactly
-    o = (3 * 6 + 2) * 3
-    assert px[o : o + 3] == bytes((32, 48, 5))
-    # resize runs fused over the really-decoded buffer
-    small = resize_images(decode_images(media, deterministic=False), 3, 2).collect()
-    assert (small[0].width, small[0].height) == (3, 2)
-    assert len(bytes(small[0].pixels)) == 3 * 2 * 3
-
-
-def test_real_wav_decode_roundtrip(spark):
-    from openset_spark.pipeline.multimodal import decode_audio
-
-    payload = _wav_bytes(rate=8000, n_ch=2, bits=16, n_samples=4000)
-    media = spark.createDataFrame(
-        [
-            (1, "audio", bytearray(payload), "audio/wav", None, None, None),
-            (2, "audio", bytearray(b"\x00\x01"), "audio/mp3", None, None, 2500),
-        ],
-        "media_id long, kind string, payload binary, mime string,"
-        " width long, height long, duration_ms long",
-    )
-    rows = {r.media_id: r for r in decode_audio(media).collect()}
-    wav = rows[1]
-    # 4000 samples @ 8kHz stereo 16-bit -> 500 ms, all fields real
-    assert (wav.sample_rate, wav.channels, wav.bits) == (8000, 2, 16)
-    assert wav.n_samples == 4000 and wav.duration_ms == 500
-    # non-WAV falls back to the metadata stub (duration preserved)
-    assert rows[2].duration_ms == 2500
-    # and refuses when the stub is disabled
-    with pytest.raises(Exception):
-        decode_audio(media, deterministic=False).collect()
 
 
 def test_embedding_near_dup_lsh_blocking(spark):
@@ -381,112 +262,6 @@ def test_prepare_corpus_nb_language_routing(spark):
         ).collect()
     }
     assert all(want[i] == g for i, g in got.items())
-
-
-def _png_bytes(w, h, channels, pixels, filters):
-    """Minimal PNG encoder for the round-trip test: 8-bit depth, one
-    IDAT, per-row filter type cycled from ``filters`` so every
-    unfilter path in decode_png_bytes is exercised."""
-    import struct
-    import zlib
-
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    stride = w * channels
-    prev = bytes(stride)
-    raw = bytearray()
-    for y in range(h):
-        f = filters[y % len(filters)]
-        line = pixels[y * stride : (y + 1) * stride]
-        enc = bytearray()
-        for i in range(stride):
-            a = line[i - channels] if i >= channels else 0
-            b = prev[i]
-            c = prev[i - channels] if i >= channels else 0
-            if f == 0:
-                v = line[i]
-            elif f == 1:
-                v = line[i] - a
-            elif f == 2:
-                v = line[i] - b
-            elif f == 3:
-                v = line[i] - ((a + b) >> 1)
-            else:  # Paeth
-                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                pr = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                v = line[i] - pr
-            enc.append(v & 0xFF)
-        raw += bytes([f]) + bytes(enc)
-        prev = line
-
-    def chunk(cid, body):
-        return (
-            struct.pack(">I", len(body))
-            + cid
-            + body
-            + struct.pack(">I", zlib.crc32(cid + body))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_real_png_decode_roundtrip(spark):
-    """PNG decodes for REAL through the same mapInPandas path
-    (VERDICT r4 ask #7): exact-pixel round-trip for RGB and RGBA with
-    every scanline filter, plus fused resize on a non-3-channel
-    image."""
-    from openset_spark.pipeline.multimodal import (
-        decode_images,
-        decode_png_bytes,
-        resize_images,
-    )
-
-    w, h = 7, 10
-    rgb = bytes(
-        b for y in range(h) for x in range(w)
-        for b in (x * 31 % 256, y * 37 % 256, (x * y) % 256)
-    )
-    rgba = bytes(
-        b for y in range(h) for x in range(w)
-        for b in (x * 29 % 256, y * 23 % 256, (x + y) % 256, (x * 7 + y) % 256)
-    )
-    # direct kernel: every filter type unfilters exactly
-    for chans, px in ((3, rgb), (4, rgba)):
-        for filters in ([0], [1], [2], [3], [4], [0, 1, 2, 3, 4]):
-            payload = _png_bytes(w, h, chans, px, filters)
-            assert decode_png_bytes(payload) == (w, h, chans, px)
-
-    # through the Arrow mapInPandas path, stubs disabled
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(_png_bytes(w, h, 3, rgb, [0, 1, 2, 3, 4])),
-             "image/png", None, None, None),
-            (2, "image", bytearray(_png_bytes(w, h, 4, rgba, [4, 3, 2, 1, 0])),
-             "image/png", None, None, None),
-        ],
-        "media_id long, kind string, payload binary, mime string,"
-        " width long, height long, duration_ms long",
-    )
-    rows = {r.media_id: r for r in decode_images(media, deterministic=False).collect()}
-    assert (rows[1].width, rows[1].height, rows[1].channels) == (w, h, 3)
-    assert bytes(rows[1].pixels) == rgb
-    assert (rows[2].width, rows[2].height, rows[2].channels) == (w, h, 4)
-    assert bytes(rows[2].pixels) == rgba
-
-    # nearest-neighbor resize honors the channel count (was hardcoded
-    # to 3 before PNG RGBA support)
-    small = {
-        r.media_id: r
-        for r in resize_images(decode_images(media, deterministic=False), 3, 2).collect()
-    }
-    assert len(bytes(small[2].pixels)) == 3 * 2 * 4
-    # top-left output pixel samples the top-left source pixel exactly
-    assert bytes(small[2].pixels)[:4] == rgba[:4]
 
 
 def test_ivf_lloyd_refinement_improves_recall(spark, sf_dir):
@@ -1055,450 +830,3 @@ def test_prepare_corpus_transitive_cluster_keeper(spark):
     assert transitive <= pairwise
     assert 1 in transitive and 4 in transitive
     assert 2 not in transitive and 3 not in transitive
-
-
-def _png_encode_full(
-    w, h, depth, ctype, px_at, plte=None, trns=None, interlace=0,
-    filters=(0, 1, 2, 3, 4),
-):
-    """General in-test PNG encoder: any supported color type/bit
-    depth, optional Adam7 interlacing, per-row filter cycling."""
-    import struct
-    import zlib
-
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[ctype]
-    bpp = max(1, channels * depth // 8)
-
-    def pack_row(pxs):
-        if depth == 16:
-            out = bytearray()
-            for p in pxs:
-                for v in p:
-                    out.append(v >> 8)
-                    out.append(v & 0xFF)
-            return out
-        if depth == 8:
-            return bytearray(b for p in pxs for b in p)
-        per_byte = 8 // depth
-        out = bytearray((len(pxs) * depth + 7) // 8)
-        for x, (v,) in enumerate(pxs):
-            shift = 8 - depth * (x % per_byte + 1)
-            out[x // per_byte] |= v << shift
-        return out
-
-    def filt(line, prev, f):
-        enc = bytearray()
-        for i in range(len(line)):
-            a = line[i - bpp] if i >= bpp else 0
-            b = prev[i]
-            c = prev[i - bpp] if i >= bpp else 0
-            if f == 0:
-                v = line[i]
-            elif f == 1:
-                v = line[i] - a
-            elif f == 2:
-                v = line[i] - b
-            elif f == 3:
-                v = line[i] - ((a + b) >> 1)
-            else:
-                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                pr = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                v = line[i] - pr
-            enc.append(v & 0xFF)
-        return enc
-
-    passes = (
-        [(0, 0, 1, 1)] if interlace == 0
-        else [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-              (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
-    )
-    raw = bytearray()
-    fi = 0
-    for x0, y0, dx, dy in passes:
-        pw = (w - x0 + dx - 1) // dx
-        ph = (h - y0 + dy - 1) // dy
-        if pw == 0 or ph == 0:
-            continue
-        prev = bytearray((pw * channels * depth + 7) // 8)
-        for ry in range(ph):
-            line = pack_row(
-                [px_at(x0 + rx * dx, y0 + ry * dy) for rx in range(pw)]
-            )
-            f = filters[fi % len(filters)]
-            fi += 1
-            raw += bytes([f]) + filt(line, prev, f)
-            prev = line
-
-    def chunk(cid, body):
-        return (
-            struct.pack(">I", len(body)) + cid + body
-            + struct.pack(">I", zlib.crc32(cid + body))
-        )
-
-    out = bytearray(b"\x89PNG\r\n\x1a\n")
-    out += chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, depth, ctype, 0, 0, interlace))
-    if plte is not None:
-        out += chunk(b"PLTE", bytes(b for c in plte for b in c))
-    if trns is not None:
-        out += chunk(b"tRNS", bytes(trns))
-    out += chunk(b"IDAT", zlib.compress(bytes(raw)))
-    out += chunk(b"IEND", b"")
-    return bytes(out)
-
-
-def test_png_palette_depths_and_trns():
-    """Color type 3 at every bit depth, with and without tRNS alpha:
-    exact pixels through the palette map."""
-    from openset_spark.pipeline.multimodal import decode_png_bytes
-
-    rng = np.random.default_rng(51)
-    for depth, ncolors in ((1, 2), (2, 4), (4, 13), (8, 200)):
-        pal = [tuple(int(v) for v in rng.integers(0, 256, size=3))
-               for _ in range(ncolors)]
-        w, h = 13, 7  # width not a multiple of any packing
-        idx = [int(i) for i in rng.integers(0, ncolors, size=w * h)]
-        data = _png_encode_full(
-            w, h, depth, 3, lambda x, y: (idx[y * w + x],), plte=pal
-        )
-        gw, gh, ch, px = decode_png_bytes(data)
-        assert (gw, gh, ch) == (w, h, 3)
-        exp = bytes(b for i in idx for b in pal[i])
-        assert px == exp
-
-        trns = [int(v) for v in rng.integers(0, 256, size=min(ncolors, 5))]
-        data = _png_encode_full(
-            w, h, depth, 3, lambda x, y: (idx[y * w + x],),
-            plte=pal, trns=trns,
-        )
-        gw, gh, ch, px = decode_png_bytes(data)
-        assert ch == 4
-        exp = bytearray()
-        for i in idx:
-            exp += bytes(pal[i])
-            exp.append(trns[i] if i < len(trns) else 255)
-        assert px == bytes(exp)
-
-
-def test_png_16bit_depths():
-    """16-bit gray/RGB/gray+A/RGBA: filters work on the byte stream
-    with a 2-byte-per-channel bpp, samples come back exactly in
-    keep_16bit mode and high-byte-stripped by default — sequential
-    and Adam7, every filter in the cycle."""
-    from openset_spark.pipeline.multimodal import decode_png_bytes
-
-    rng = np.random.default_rng(53)
-    for w, h in ((9, 5), (1, 1), (8, 8)):
-        for ctype, nch in ((0, 1), (2, 3), (4, 2), (6, 4)):
-            vals = rng.integers(0, 1 << 16, size=(h, w, nch))
-
-            def at(x, y):
-                return tuple(int(v) for v in vals[y, x])
-
-            for interlace in (0, 1):
-                data = _png_encode_full(
-                    w, h, 16, ctype, at, interlace=interlace
-                )
-                gw, gh, ch, px = decode_png_bytes(data, keep_16bit=True)
-                assert (gw, gh, ch) == (w, h, nch)
-                exp16 = bytearray()
-                for v in vals.reshape(-1):
-                    exp16.append(int(v) >> 8)
-                    exp16.append(int(v) & 0xFF)
-                assert px == bytes(exp16)
-                gw, gh, ch, px8 = decode_png_bytes(data)
-                assert (gw, gh, ch) == (w, h, nch)
-                assert px8 == bytes(int(v) >> 8 for v in vals.reshape(-1))
-
-
-def test_png_adam7_interlaced():
-    """Adam7 for RGB, RGBA, gray and 4-bit palette — including tiny
-    images where some passes are empty."""
-    from openset_spark.pipeline.multimodal import decode_png_bytes
-
-    rng = np.random.default_rng(52)
-    for w, h in ((11, 9), (3, 2), (1, 1), (8, 8)):
-        for ctype, nch in ((2, 3), (6, 4), (0, 1)):
-            vals = rng.integers(0, 256, size=(h, w, nch))
-
-            def at(x, y):
-                return tuple(int(v) for v in vals[y, x])
-
-            data = _png_encode_full(w, h, 8, ctype, at, interlace=1)
-            gw, gh, ch, px = decode_png_bytes(data)
-            assert (gw, gh, ch) == (w, h, nch)
-            assert px == bytes(int(v) for v in vals.reshape(-1))
-        # palette + interlace + sub-byte packing
-        pal = [tuple(int(v) for v in rng.integers(0, 256, size=3))
-               for _ in range(9)]
-        idx = rng.integers(0, 9, size=(h, w))
-        data = _png_encode_full(
-            w, h, 4, 3, lambda x, y: (int(idx[y, x]),), plte=pal, interlace=1
-        )
-        gw, gh, ch, px = decode_png_bytes(data)
-        assert (gw, gh, ch) == (w, h, 3)
-        exp = bytes(b for i in idx.reshape(-1) for b in pal[int(i)])
-        assert px == exp
-
-
-def _box(cid, *payload):
-    import struct
-
-    body = b"".join(payload)
-    return struct.pack(">I", 8 + len(body)) + cid + body
-
-
-def _mp4_bytes(duration_ms=5500, timescale=1000, w=640, h=360,
-               codec=b"avc1", v1=False, audio_track=True):
-    import struct
-
-    if v1:
-        mvhd = _box(
-            b"mvhd", b"\x01" + b"\x00" * 3 + b"\x00" * 16
-            + struct.pack(">IQ", timescale, duration_ms * timescale // 1000)
-            + b"\x00" * 80,
-        )
-    else:
-        mvhd = _box(
-            b"mvhd", b"\x00" * 4 + b"\x00" * 8
-            + struct.pack(">II", timescale, duration_ms * timescale // 1000)
-            + b"\x00" * 80,
-        )
-
-    def trak(kind, codec_id, tw, th):
-        tkhd = _box(
-            b"tkhd", b"\x00" * 4 + b"\x00" * 72
-            + struct.pack(">II", tw << 16, th << 16),
-        )
-        hdlr = _box(b"hdlr", b"\x00" * 8 + kind + b"\x00" * 12)
-        stsd = _box(b"stsd", b"\x00" * 8 + _box(codec_id, b"\x00" * 8))
-        stbl = _box(b"stbl", stsd)
-        minf = _box(b"minf", stbl)
-        mdia = _box(b"mdia", hdlr, minf)
-        return _box(b"trak", tkhd, mdia)
-
-    traks = [trak(b"vide", codec, w, h)]
-    if audio_track:
-        traks.append(trak(b"soun", b"mp4a", 0, 0))
-    moov = _box(b"moov", mvhd, *traks)
-    ftyp = _box(b"ftyp", b"isom" + b"\x00" * 4 + b"mp42")
-    return ftyp + moov
-
-
-def test_probe_mp4_metadata(spark):
-    """ISO-BMFF probe: brand, mvhd duration (32- and 64-bit forms),
-    per-track codec/kind and the tkhd 16.16 dimensions — through the
-    Arrow probe_videos path; non-MP4 payloads yield null metadata."""
-    from openset_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        probe_mp4_bytes,
-        probe_videos,
-    )
-
-    data = _mp4_bytes(duration_ms=5500, w=640, h=360)
-    meta = probe_mp4_bytes(data)
-    assert meta["brand"] == "isom" and meta["duration_ms"] == 5500
-    kinds = [t.get("kind") for t in meta["tracks"]]
-    assert kinds == ["vide", "soun"]
-    assert meta["tracks"][0]["codec"] == "avc1"
-    assert (meta["tracks"][0]["width"], meta["tracks"][0]["height"]) == (640, 360)
-
-    # 64-bit mvhd (version 1)
-    meta1 = probe_mp4_bytes(_mp4_bytes(duration_ms=7250, v1=True))
-    assert meta1["duration_ms"] == 7250
-
-    media = spark.createDataFrame(
-        [
-            (1, "video", bytearray(data), "video/mp4", None, None, None),
-            (2, "video", bytearray(b"\x00" * 32), "video/x-raw", None, None, None),
-            (3, "image", bytearray(b"P6"), "image/ppm", None, None, None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = {r.media_id: r for r in probe_videos(media).collect()}
-    assert set(rows) == {1, 2}  # images filtered out
-    assert rows[1].video_codec == "avc1" and rows[1].duration_ms == 5500
-    assert rows[1].n_tracks == 2 and (rows[1].width, rows[1].height) == (640, 360)
-    assert rows[2].brand is None and rows[2].duration_ms is None
-
-
-def test_probe_mp3_metadata():
-    """MP3 probe: ID3v2 skip (syncsafe size), frame-sync scan,
-    MPEG1/2 bitrate + sample-rate tables, mono/stereo mode, CBR
-    duration estimate."""
-    from openset_spark.pipeline.multimodal import probe_mp3_bytes
-
-    # MPEG1 Layer III, 128 kbps, 44100 Hz, joint stereo (mode 01)
-    hdr = bytes([0xFF, 0xFB, 0x90, 0x40])
-    audio = hdr + b"\x00" * (16000 - 4)  # 16 kB -> 1s at 128 kbps
-    id3 = b"ID3\x04\x00\x00" + bytes([0, 0, 0, 10]) + b"\x00" * 10
-    meta = probe_mp3_bytes(id3 + audio)
-    assert meta["mpeg_version"] == 1 and meta["layer"] == 3
-    assert meta["bitrate"] == 128_000 and meta["sample_rate"] == 44100
-    assert meta["channels"] == 2
-    assert meta["duration_ms"] == 1000
-
-    # MPEG2, 64 kbps @ 22050, mono (mode 11)
-    hdr2 = bytes([0xFF, 0xF3, 0x80, 0xC0])
-    meta2 = probe_mp3_bytes(hdr2 + b"\x00" * (8000 - 4))
-    assert meta2["mpeg_version"] == 2 and meta2["bitrate"] == 64_000
-    assert meta2["sample_rate"] == 22050 and meta2["channels"] == 1
-    assert meta2["duration_ms"] == 1000
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        probe_mp3_bytes(b"\x00" * 64)
-
-
-def _wav_pcm(rate, n_ch, bits, channel_samples):
-    """WAV bytes from explicit per-channel integer samples."""
-    import io
-    import struct
-    import wave
-
-    step = bits // 8
-    n = len(channel_samples[0])
-    frames = bytearray()
-    for i in range(n):
-        for c in range(n_ch):
-            s = channel_samples[c][i]
-            if bits == 8:
-                frames.append((s + 128) & 0xFF)
-            else:
-                frames += int(s).to_bytes(step, "little", signed=True)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(n_ch)
-        wf.setsampwidth(step)
-        wf.setframerate(rate)
-        wf.writeframes(bytes(frames))
-    return buf.getvalue()
-
-
-def test_wav_samples_deinterleave_and_widths():
-    from openset_spark.pipeline.multimodal import wav_samples
-
-    left = [100, -200, 300, -400]
-    right = [1, 2, 3, 4]
-    rate, n_ch, bits, chans = wav_samples(
-        _wav_pcm(8000, 2, 16, [left, right])
-    )
-    assert (rate, n_ch, bits) == (8000, 2, 16)
-    assert chans == [left, right]
-    # 8-bit unsigned recenters to signed
-    _, _, _, c8 = wav_samples(_wav_pcm(8000, 1, 8, [[-128, 0, 127]]))
-    assert c8 == [[-128, 0, 127]]
-
-
-def test_audio_feature_rows_square_dc_stereo(spark):
-    from openset_spark.pipeline.multimodal import audio_feature_rows
-
-    # left: square wave amplitude 1000, half-period 4 -> RMS exactly
-    # 1000; one strict sign flip every 4 samples starting at j=4.
-    # right: DC at -700 -> RMS 700, zero crossings 0.
-    n = 32
-    left = [1000 if (i // 4) % 2 == 0 else -1000 for i in range(n)]
-    right = [-700] * n
-    payload = _wav_pcm(8000, 2, 16, [left, right])
-    media = spark.createDataFrame(
-        [(7, "audio", bytearray(payload), "audio/wav", None, None, None),
-         (8, "image", bytearray(b"xx"), "image/png", None, None, None)],
-        "media_id long, kind string, payload binary, mime string,"
-        " width long, height long, duration_ms long",
-    )
-    rows = audio_feature_rows(media, frame=16).collect()
-    got = {(r.channel, r.frame_idx): r for r in rows}
-    assert len(rows) == 4  # 2 channels x 2 frames; image row skipped
-    for fi in (0, 1):
-        sq = got[(0, fi)]
-        assert sq.n == 16 and sq.rms == 1000.0 and sq.peak == 1000
-        assert sq.zcr == 3  # flips at j=4,8,12 within each 16-frame
-        dc = got[(1, fi)]
-        assert dc.rms == 700.0 and dc.zcr == 0 and dc.peak == 700
-
-
-def test_audio_feature_rows_tail_frame_and_zero_runs(spark):
-    from openset_spark.pipeline.multimodal import audio_feature_rows
-
-    # 10 samples at frame=8 -> tail frame of 2; zeros between signs
-    # are NOT strict flips (prev*s < 0 skips zero boundaries)
-    xs = [500, 0, -500, 0, 500, 0, -500, 0, 300, 300]
-    payload = _wav_pcm(8000, 1, 16, [xs])
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(payload), "audio/wav", None, None, None)],
-        "media_id long, kind string, payload binary, mime string,"
-        " width long, height long, duration_ms long",
-    )
-    rows = {r.frame_idx: r for r in
-            audio_feature_rows(media, frame=8).collect()}
-    assert rows[0].n == 8 and rows[0].zcr == 0  # zeros break strictness
-    assert rows[1].n == 2 and rows[1].peak == 300
-    import math
-
-    assert rows[1].rms == math.sqrt((300 * 300 + 300 * 300) / 2)
-
-
-def _aiff_bytes(rate, n_ch, bits, channel_samples):
-    """AIFF via the stdlib aifc-free route: hand-built FORM/COMM/SSND
-    with the 80-bit extended-float rate — an INDEPENDENT writer, so
-    the decoder's rate extraction is not self-referential."""
-    import struct
-
-    n = len(channel_samples[0])
-    step = bits // 8
-    # 80-bit extended float of an integer rate
-    e = 16383 + 63
-    m = rate
-    while m < (1 << 63):
-        m <<= 1
-        e -= 1
-    comm = struct.pack(">hIh", n_ch, n, bits) + struct.pack(">H", e) + m.to_bytes(8, "big")
-    frames = bytearray()
-    for i in range(n):
-        for c in range(n_ch):
-            frames += int(channel_samples[c][i]).to_bytes(
-                step, "big", signed=True
-            )
-    ssnd = struct.pack(">II", 0, 0) + bytes(frames)
-
-    def chunk(cid, body):
-        pad = b"\x00" if len(body) & 1 else b""
-        return cid + struct.pack(">I", len(body)) + body + pad
-
-    inner = b"AIFF" + chunk(b"COMM", comm) + chunk(b"SSND", ssnd)
-    return b"FORM" + struct.pack(">I", len(inner)) + inner
-
-
-def test_aiff_decode_and_container_invariance(spark):
-    from openset_spark.pipeline.multimodal import (
-        audio_feature_rows,
-        decode_aiff_bytes,
-        decode_audio,
-    )
-
-    left = [1000, -1000, 500, -500] * 4
-    right = [-700] * 16
-    payload = _aiff_bytes(44100, 2, 16, [left, right])
-    rate, ch, bits, chans = decode_aiff_bytes(payload)
-    assert (rate, ch, bits) == (44100, 2, 16)
-    assert chans == [left, right]
-    # odd rates decode exactly too (the 80-bit float is integral)
-    assert decode_aiff_bytes(_aiff_bytes(22050, 1, 16, [[1, 2, 3]]))[0] == 22050
-
-    wav = _wav_pcm(44100, 2, 16, [left, right])
-    media = spark.createDataFrame(
-        [
-            (1, "audio", bytearray(payload), "audio/aiff", None, None, None),
-            (2, "audio", bytearray(wav), "audio/wav", None, None, None),
-        ],
-        "media_id long, kind string, payload binary, mime string,"
-        " width long, height long, duration_ms long",
-    )
-    meta = {r.media_id: r for r in decode_audio(media).collect()}
-    assert meta[1].sample_rate == 44100 and meta[1].n_samples == 16
-    feats = {}
-    for r in audio_feature_rows(media, frame=8).collect():
-        feats.setdefault(r.media_id, set()).add(
-            (r.channel, r.frame_idx, r.n, r.rms, r.zcr, r.peak)
-        )
-    assert feats[1] == feats[2]  # AIFF == WAV of the same samples

@@ -233,32 +233,6 @@ def test_semantic_dedup_drops_within_cluster_twins(spark):
     assert len(kept_ids) == len(rows) - len(twin_of)
 
 
-def test_probe_avif_bytes():
-    import struct
-
-    from openset_spark.pipeline.multimodal import probe_avif_bytes
-
-    def box(tag, body):
-        return struct.pack(">I4s", len(body) + 8, tag) + body
-
-    ispe = box(b"ispe", b"\x00\x00\x00\x00" + struct.pack(">II", 640, 480))
-    av1c = box(b"av1C", b"\x81\x0c\x00\x00")
-    ipco = box(b"ipco", ispe + av1c)
-    iprp = box(b"iprp", ipco)
-    meta = box(b"meta", b"\x00\x00\x00\x00" + iprp)
-    ftyp = box(b"ftyp", b"avif\x00\x00\x00\x00avifmif1")
-    data = ftyp + meta
-    got = probe_avif_bytes(data)
-    assert got == {
-        "brand": "avif", "codec": "av01", "width": 640, "height": 480
-    }
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        probe_avif_bytes(b"\x00\x00\x00\x08nope")
-
-
 # ---- late-r8 operators: zipf_fit / kneser_ney / dup spans / tags ----
 
 

@@ -1122,64 +1122,6 @@ def test_stream_ivfpq_encode_matches_batch(spark, sf_dir, tmpdir):
     assert len({lid for _, lid, _ in streamed}) >= 2
 
 
-def test_stream_audio_features_match_batch(spark, tmpdir):
-    """18th parity surface — the first MULTIMODAL one: live media
-    ingest feature extraction. Binary audio payloads (a WAV and a
-    FLAC carrying different signals) stream in as parquet files;
-    audio_feature_rows is Arrow-batched mapInPandas with no state, so
-    the streamed feature rows equal the batch extraction of the same
-    files exactly, for any arrival order or micro-batch split — the
-    front-end an audio corpus runs BEFORE its stateful stages."""
-    from openset_spark.pipeline.multimodal import audio_feature_rows
-    from tests.test_flac import _Enc
-    from tests.test_pipeline import _wav_pcm
-
-    n = 32
-    square = [2000 if (i // 8) % 2 == 0 else -2000 for i in range(n)]
-    ramp = [100 * (i - 16) for i in range(n)]
-    wav = _wav_pcm(8000, 2, 16, [square, ramp])
-    enc = _Enc(rate=8000, bps=16)
-
-    def f(w):
-        enc.frame_header(w, n, 0, 0)
-        enc.verbatim_sub(w, ramp, 16)
-
-    flac = enc.stream([enc.frame(f)], 1, n)
-    schema = (
-        "media_id long, kind string, payload binary, mime string,"
-        " width long, height long, duration_ms long"
-    )
-    for i, (mid, payload, mime) in enumerate(
-        [(1, wav, "audio/wav"), (2, flac, "audio/flac")]
-    ):
-        spark.createDataFrame(
-            [(mid, "audio", bytearray(payload), mime, None, None, None)],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(tmpdir + "/media")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(tmpdir + "/media")
-    )
-    name = f"parity_audio_{uuid.uuid4().hex[:8]}"
-    _run_available(audio_feature_rows(stream, frame=16), name)
-    streamed = {
-        (r.media_id, r.channel, r.frame_idx, r.n, r.rms, r.zcr, r.peak)
-        for r in spark.sql(f"select * from {name}").collect()
-    }
-    batch = {
-        (r.media_id, r.channel, r.frame_idx, r.n, r.rms, r.zcr, r.peak)
-        for r in audio_feature_rows(
-            spark.read.schema(schema).parquet(tmpdir + "/media"), frame=16
-        ).collect()
-    }
-    assert streamed == batch
-    assert len(streamed) == 2 * 2 + 1 * 2  # stereo WAV + mono FLAC frames
-    # the two containers genuinely contributed distinct signals
-    assert {m for m, *_ in streamed} == {1, 2}
-
-
 def test_stream_keep_best_matches_batch(spark, sf_dir, tmpdir):
     """19th parity surface: folding the live quality-keeper stream
     (admits minus evicts) must equal dedup_keep_best's keep=True set
@@ -1258,66 +1200,6 @@ def test_stream_keep_best_matches_batch(spark, sf_dir, tmpdir):
     # the tie rule resolved to the LOWER id at equal score 11.0:
     # doc 599_999 (score 11.0) beats 600_000 (score 11.0)
     assert 599_999 in kept and 600_000 not in kept
-
-
-def test_stream_image_hashes_match_batch(spark, tmpdir):
-    """20th parity surface — second multimodal one: live perceptual
-    image hashing for ingest-time near-dup screening. decode_images
-    and image_hashes are both stateless Arrow mapInPandas stages, so
-    the composed stream equals the batch hashes of the same files
-    bit for bit, for any arrival order or micro-batch split — a
-    100 TB ingest points this at the media firehose and feeds the
-    Hamming-banded candidate join downstream."""
-    import sys
-
-    if "/root/repo/tests" not in sys.path:
-        sys.path.insert(0, "/root/repo/tests")
-    from openset_spark.pipeline.image_dedup import image_hashes
-    from openset_spark.pipeline.multimodal import decode_images
-    from test_image_dedup import _pattern, _ppm
-
-    schema = (
-        "media_id long, kind string, payload binary, mime string,"
-        " width long, height long, duration_ms long"
-    )
-    payloads = [
-        (1, _ppm(48, 32, _pattern)),
-        (2, _ppm(32, 24, _pattern)),   # resize twin of 1
-        (3, _ppm(40, 40, lambda x, y, w, h: (x * 13 + y * 29) % 256)),
-    ]
-    for mid, p in payloads:
-        spark.createDataFrame(
-            [(mid, "image", bytearray(p), "image/ppm", None, None, None)],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(tmpdir + "/media")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(tmpdir + "/media")
-    )
-    name = f"parity_imghash_{uuid.uuid4().hex[:8]}"
-    _run_available(image_hashes(decode_images(stream)), name)
-    streamed = {
-        (r.media_id, r.dhash, r.phash)
-        for r in spark.sql(f"select * from {name}").collect()
-    }
-    batch = {
-        (r.media_id, r.dhash, r.phash)
-        for r in image_hashes(
-            decode_images(spark.read.schema(schema).parquet(tmpdir + "/media"))
-        ).collect()
-    }
-    assert streamed == batch and len(streamed) == 3
-    # the live hashes carry the perceptual signal: the resize twin is
-    # within Hamming 8 of its original, the distinct image is not
-    h = {m: (d, p) for m, d, p in streamed}
-
-    def ham(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-    assert ham(h[1][1], h[2][1]) <= 8
-    assert ham(h[1][1], h[3][1]) > 8
 
 
 def test_stream_asof_enrich_matches_batch_asof_join(spark, tmpdir):
@@ -1546,57 +1428,6 @@ def test_stream_nb_quality_matches_batch(spark, sf_dir, tmpdir):
     }
     assert streamed == expected
     assert len(expected) > 50
-
-
-def test_stream_frame_diffs_match_batch(spark, tmpdir):
-    """25th parity surface — third multimodal one (audio 18th, image
-    20th, video now): live scene statistics with state = previous
-    frame per media. Frames stream in order across micro-batches; the
-    batch boundary falls INSIDE a scene so the state carry is what
-    produces the right diff; output equals batch frame_diffs exactly
-    (pure integer arithmetic both sides)."""
-    from openset_spark.pipeline.multimodal import GIF_FRAME_SCHEMA
-    from openset_spark.pipeline.scenes import frame_diffs, stream_frame_diffs
-
-    flat = bytes([10] * 12)
-    other = bytes([200] * 12)
-    all_rows = [
-        (1, 0, 0, 4, 1, 3, bytearray(flat)),
-        (2, 0, 0, 4, 1, 3, bytearray(other)),
-        (1, 1, 40, 4, 1, 3, bytearray(flat)),
-        # ---- batch boundary here: frame 2 diffs against state ----
-        (1, 2, 80, 4, 1, 3, bytearray(other)),
-        (2, 1, 40, 4, 1, 3, bytearray(other)),
-        (1, 3, 120, 4, 1, 3, bytearray(other)),
-    ]
-    for i, chunk in enumerate((all_rows[:3], all_rows[3:])):
-        spark.createDataFrame(chunk, GIF_FRAME_SCHEMA).coalesce(
-            1
-        ).write.mode("append").parquet(f"{tmpdir}/frames")
-    _stamp_ordered(f"{tmpdir}/frames")
-
-    stream = (
-        spark.readStream.schema(GIF_FRAME_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{tmpdir}/frames")
-    )
-    name = f"parity_scene_{uuid.uuid4().hex[:8]}"
-    _run_available(stream_frame_diffs(stream), name)
-    streamed = {
-        (r.media_id, r.frame_idx): r.diff_pm
-        for r in spark.sql(f"select * from {name}").collect()
-    }
-    batch_in = spark.read.schema(GIF_FRAME_SCHEMA).parquet(
-        f"{tmpdir}/frames"
-    )
-    expected = {
-        (r.media_id, r.frame_idx): r.diff_pm
-        for r in frame_diffs(batch_in).collect()
-    }
-    assert streamed == expected
-    # the cross-batch carry produced a real scene change
-    assert streamed[(1, 2)] >= 60 and streamed[(1, 3)] == 0
-    assert streamed[(1, 0)] is None and streamed[(2, 0)] is None
 
 
 def test_stream_hll_observations_fold_matches_batch(spark, sf_dir, tmpdir):

@@ -818,33 +818,6 @@ def test_webp_animation_first_frame():
     assert (w, h, ch, out) == ref
 
 
-def test_webp_lossy_routes_through_decode_images(spark):
-    from openset_spark.pipeline.multimodal import MEDIA_SCHEMA, decode_images
-
-    frame = _lossy_frame(20, 14, seed=77)
-    data = _container(_chunk(b"VP8 ", frame))
-    media = spark.createDataFrame(
-        [(9, "image", bytearray(data), "image/webp", None, None, None)],
-        MEDIA_SCHEMA,
-    )
-    r = decode_images(media, deterministic=False).collect()[0]
-    assert (r.width, r.height, r.channels) == (20, 14, 3)
-
-
-def test_webp_routes_through_decode_images(spark):
-    from openset_spark.pipeline.multimodal import MEDIA_SCHEMA, decode_images
-
-    rng = np.random.default_rng(33)
-    px = _rand_px(rng, 6 * 4)
-    data = wrap_webp(encode_vp8l(6, 4, px, use_lz77=False))
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(data), "image/webp", None, None, None)],
-        MEDIA_SCHEMA,
-    )
-    r = decode_images(media, deterministic=False).collect()[0]
-    assert (r.width, r.height, r.channels) == (6, 4, 3)
-
-
 def test_vp8l_fuzz():
     try:
         from hypothesis import given, settings, strategies as st
