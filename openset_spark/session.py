@@ -3,6 +3,16 @@
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; the same configs
 (AQE, Arrow, sized shuffle partitions) are what we would ship on a
 multi-executor cluster — nothing here assumes single-node.
+
+Python workers start from ``openset_spark.worker_daemon``
+(``spark.python.daemon.module``), which is pyspark's daemon with one
+fix: pyspark calls ``importlib.invalidate_caches()`` at the start of
+every Python task (``worker_util.setup_spark_files``), and on CPython
+3.11 and 3.12 ``zipimporter.invalidate_caches`` re-reads the whole
+central directory of ``pyspark.zip`` eagerly, once per zipimporter the
+worker holds: about 0.1 s per task. The library daemon re-reads an
+archive only when it has changed. The module must be importable by the
+workers, as the library's own UDFs already are.
 """
 
 from __future__ import annotations
@@ -38,6 +48,7 @@ def get_spark(app_name: str = "openset-spark", *, shuffle_partitions: int | None
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "openset_spark.worker_daemon")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Align whole-stage codegen's bail-out with HotSpot's actual
         # JIT refusal threshold (-XX:HugeMethodLimit = 8000 bytecode

@@ -13,11 +13,11 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
     StructField,
     StructType,
@@ -68,10 +68,8 @@ def _close_sessions(
             )
         return
 
-    ts_list: list[int] = []
-    for pdf in pdfs:
-        ts_list.extend(int(t.value // 1000) for t in pdf["ts"])
-    ts_list.sort()
+    ts_us = [pdf["ts"].to_numpy("datetime64[ns]").astype(np.int64) // 1000 for pdf in pdfs]
+    ts_list = np.sort(np.concatenate(ts_us)).tolist() if ts_us else []
     if not ts_list:
         return
 
@@ -106,12 +104,14 @@ def stream_sessionize(
 ) -> DataFrame:
     """events stream -> closed-session stream (append mode).
     ``gap_ms`` mirrors batch ``with_session`` (the reference's
-    session_time parameter) so streaming and batch boundaries agree."""
+    session_time parameter) so streaming and batch boundaries agree.
+    Only ``user_id`` and ``ts`` go to the Python worker: the state
+    function reads nothing else."""
 
     def fn(key, pdfs, state):
         return _close_sessions(key, pdfs, state, gap_ms)
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    return events.select("user_id", "ts").groupBy("user_id").applyInPandasWithState(
         fn,
         outputStructType=SESSION_OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,

@@ -303,6 +303,89 @@ def test_stream_sessionize_matches_batch_with_session(spark, sf_dir, tmpdir):
     assert streamed == expected
 
 
+def test_stream_sessionize_restarts_from_an_unprojected_checkpoint(spark, sf_dir, tmpdir):
+    """Restart across the input projection: k micro-batches under the
+    earlier plan (every event column into the state function), then
+    ``stream_sessionize`` (``user_id`` and ``ts`` only) on the same
+    checkpoint. The emitted sessions equal an uninterrupted run's, and
+    some session open at the stop is closed after the restart."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from openset_spark.streaming.sessions import (
+        SESSION_OUTPUT_SCHEMA,
+        STATE_SCHEMA,
+        _close_sessions,
+        stream_sessionize,
+    )
+
+    def unprojected_sessionize(events):
+        return events.groupBy("user_id").applyInPandasWithState(
+            _close_sessions,
+            outputStructType=SESSION_OUTPUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        )
+
+    staging = os.path.join(tmpdir, "staging")
+    feed = os.path.join(tmpdir, "feed")
+    os.makedirs(staging)
+    os.makedirs(feed)
+    assert _spill_events(spark, sf_dir, staging) > 0
+    files = sorted(os.listdir(staging))
+    k = N_FILES - 1
+
+    def arrive(names):
+        import time
+
+        base = time.time() - 1000
+        for name in names:
+            shutil.copy(os.path.join(staging, name), feed)
+            i = files.index(name)
+            os.utime(os.path.join(feed, name), (base + 10 * i, base + 10 * i))
+
+    def run(build, leg, names):
+        # The 30-min processing-time timeout keeps Spark running no-data
+        # batches, so neither availableNow termination nor
+        # processAllAvailable() marks the end; a restart may also first
+        # redo an interrupted no-data batch. Stop once this leg's rows
+        # are committed.
+        import time
+
+        stream = read_event_stream(spark, feed, max_files_per_trigger=1)
+        q = (
+            build(stream).writeStream.format("parquet")
+            .option("path", os.path.join(tmpdir, f"sink-{leg}"))
+            .option("checkpointLocation", os.path.join(tmpdir, f"ckpt-{leg}"))
+            .outputMode("append")
+            .start()
+        )
+        want = sum(sum(1 for _ in open(os.path.join(staging, n))) for n in names)
+        rows: dict[int, int] = {}
+        deadline = time.time() + 600
+        while sum(rows.values()) < want and time.time() < deadline:
+            rows.update((p["batchId"], p["numInputRows"]) for p in q.recentProgress)
+            time.sleep(0.2)
+        q.stop()
+        assert sum(rows.values()) == want, (leg, rows, want)
+        return {
+            (r.user_id, r.session_start, r.session_end, r.n_events)
+            for r in spark.read.parquet(os.path.join(tmpdir, f"sink-{leg}")).collect()
+        }
+
+    arrive(files[:k])
+    before_stop = run(unprojected_sessionize, "restarted", files[:k])
+    arrive(files[k:])
+    restarted = run(stream_sessionize, "restarted", files[k:])
+    uninterrupted = run(stream_sessionize, "uninterrupted", files)
+
+    assert len(uninterrupted) > 10
+    assert restarted == uninterrupted
+    after_restart = restarted - before_stop
+    first_new = _batch_frame(spark, os.path.join(staging, files[k])).agg(F.min("ts")).first()[0]
+    assert any(start < first_new for _, start, _, _ in after_restart)
+
+
 def test_stream_funnel_matches_batch_funnel(spark, sf_dir, tmpdir):
     """Streaming funnel advances == the batch min-ts chain: for every
     user, the set of completed steps and their completion stamps."""

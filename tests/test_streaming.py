@@ -108,6 +108,63 @@ def test_stream_sessionize_closes_on_gap(spark, tmpdir):
     assert not any(r.user_id == 2 for r in rows)
 
 
+class _FakeState:
+    hasTimedOut = False
+    value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+    def setTimeoutDuration(self, ms):
+        pass
+
+
+def test_close_sessions_matches_the_per_event_timestamp_loop():
+    """The state function's vectorized µs conversion gives the sessions
+    the per-event ``pd.Timestamp`` loop gave, for each timestamp dtype
+    Arrow may hand over and for unsorted, split input."""
+    import numpy as np
+    import pandas as pd
+
+    from openset_spark.streaming.sessions import _close_sessions
+
+    gap_ms = 60_000
+    rng = np.random.default_rng(7)
+    us = 1_704_067_200_000_000 + np.cumsum(rng.integers(1, 3 * gap_ms * 1000, 200))
+    rng.shuffle(us)
+    ts = pd.Series(pd.to_datetime(us, unit="us"))
+    for dtype in ("datetime64[ns]", "datetime64[us]", "datetime64[ns, UTC]"):
+        col = ts.dt.tz_localize("UTC") if "UTC" in dtype else ts.astype(dtype)
+        pdfs = [pd.DataFrame({"ts": col[:70]}), pd.DataFrame({"ts": col[70:]})]
+
+        ref = sorted(int(t.value // 1000) for pdf in pdfs for t in pdf["ts"])
+        want, start, last, n = [], ref[0], ref[0], 0
+        for t in ref:
+            if n > 0 and t - last > gap_ms * 1000:
+                want.append((start, last, n))
+                start, n = t, 0
+            last = max(last, t)
+            n += 1
+
+        state = _FakeState()
+        (out,) = _close_sessions((1,), pdfs, state, gap_ms)
+        got = [
+            (s.value // 1000, e.value // 1000, int(c))
+            for s, e, c in zip(out["session_start"], out["session_end"], out["n_events"])
+        ]
+        assert len(want) > 10
+        assert got == want, dtype
+        assert state.value == (start, last, n), dtype
+
+
 def test_stream_segment_transitions(spark, tmpdir):
     _write_events(
         tmpdir,
