@@ -5,7 +5,7 @@ JPEG, decoded by pipeline/jpeg.py) and uncompressed bottom-up DIB.
 This closes the "video frame decode" gap for the one family that
 needs no native codec: MJPEG remains common in surveillance /
 capture-card corpora, and DIB covers raw-dump AVIs. Anything else
-(VP9/AV1) is not decoded; H.264 streams go to pipeline/h264.py.
+(H.264, VP9, AV1) is not decoded.
 
 MJPEG quirk handled for real: many MJPEG writers OMIT the Huffman
 tables from every frame (historical Microsoft reading of the spec);

@@ -126,14 +126,6 @@ def _apply_map(c: Column, pairs: list) -> Column:
     return c
 
 
-def fix_mojibake(text: Column) -> Column:
-    """The repair chain alone (double-encoded, then punctuation,
-    accents, spacing) — for use inside a wider projection."""
-    for _name, pairs in MOJIBAKE_CLASSES:
-        text = _apply_map(text, pairs)
-    return text
-
-
 def mojibake_repair(
     df: DataFrame,
     text_col: str = "text",

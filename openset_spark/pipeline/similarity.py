@@ -450,13 +450,6 @@ def lsh_buckets_array(
     )
 
 
-def lsh_bucket(df: DataFrame, dim: int, n_planes: int = 16, vec_col: str = "embedding", seed: int = 42) -> DataFrame:
-    """Add a ``bucket`` column: sign-bit signature over random
-    hyperplanes. Vectors in the same bucket are ANN candidates."""
-    sig = lsh_buckets_array(f"`{vec_col}`", dim, n_planes, 1, seed)
-    return df.withColumn("bucket", sig[0])
-
-
 def _arrow_lsh_buckets(
     df: DataFrame,
     id_col: str,

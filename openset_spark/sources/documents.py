@@ -62,15 +62,6 @@ def _rel_source(root: str) -> Column:
     return F.regexp_replace(no_scheme, "^" + re.escape(base) + "/", "")
 
 
-DOC_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("source", StringType()),
-    ]
-)
-
-
 def _with_doc_id(df: DataFrame, id_col: str | None) -> DataFrame:
     """Normalize the id column: keep a provided one (cast to long),
     else derive a deterministic content hash."""

@@ -17,7 +17,7 @@ no window pass.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -52,11 +52,6 @@ def parse_events(json_lines: DataFrame, tdef: TableDef) -> DataFrame:
     ]
     cols += [F.col(p.name) for p in tdef.properties if not p.is_customer]
     return parsed.select(*cols)
-
-
-def read_events_json(spark: SparkSession, path: str, tdef: TableDef) -> DataFrame:
-    """Load a directory/file of JSON-lines inserts as typed events."""
-    return parse_events(spark.read.text(path), tdef)
 
 
 def customer_snapshot(json_lines: DataFrame, tdef: TableDef) -> DataFrame:

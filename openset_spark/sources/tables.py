@@ -42,9 +42,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Small dimension tables that should always be broadcast in joins.
-DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 
 def _data_file(path: str) -> str:
     """The file whose footer Spark's non-merging schema inference reads:

@@ -40,7 +40,7 @@ N_FILES = 3
 
 def _spill_events(spark, sf_dir, outdir, n_users=40):
     """Re-serialize real events (user subset, ts-ordered) into N_FILES
-    JSON-lines files named so the file source replays them in time
+    JSON-lines files stamped so the file source replays them in time
     order, one micro-batch each."""
     ev = (
         load_table(spark, sf_dir, "events")
@@ -63,6 +63,7 @@ def _spill_events(spark, sf_dir, outdir, n_users=40):
         with open(f"{outdir}/batch-{i:03d}.json", "w") as f:
             for r in rows[i * chunk : (i + 1) * chunk]:
                 f.write(json.dumps(r) + "\n")
+    _stamp_ordered(outdir, "batch-*.json")
     return len(rows)
 
 
@@ -119,7 +120,7 @@ def _wait_drained(q):
     raise AssertionError("stream did not drain in 600s")
 
 
-def _stamp_ordered(tmpdir, n_files=None):
+def _stamp_ordered(tmpdir, pattern="docs-*.json"):
     """Pin STRICTLY INCREASING mtimes (seconds apart) on the stream
     files: Spark's FileStreamSource orders files by modification
     time, and three writes landing in the same clock tick (or
@@ -131,7 +132,7 @@ def _stamp_ordered(tmpdir, n_files=None):
     import time as _time
 
     base = _time.time() - 1000
-    for k, path in enumerate(sorted(_glob.glob(f"{tmpdir}/docs-*.json"))):
+    for k, path in enumerate(sorted(_glob.glob(f"{tmpdir}/{pattern}"))):
         os.utime(path, (base + 10 * k, base + 10 * k))
 
 

@@ -14,7 +14,6 @@ import pytest
 
 from openset_spark.pipeline.webp import (
     CODE_LENGTH_ORDER,
-    DIST_MAP,
     decode_webp_bytes,
 )
 
